@@ -106,3 +106,52 @@ def delta_decode(data: bytes) -> np.ndarray:
     """Inverse of :func:`delta_encode` -> ascending uint64 array."""
     gaps = varbyte_decode(data)
     return np.cumsum(gaps, dtype=np.uint64)
+
+
+def _stream(runs, col: str, count: int) -> np.ndarray:
+    """One varbyte pass over a blob column's concatenated bytes (varbyte
+    is self-delimiting), checked against the expected value count."""
+    vals = varbyte_decode(b"".join(runs[col]))
+    if vals.size != count:
+        raise ValueError(
+            f"decode_runs: {col!r} holds {vals.size} values, expected {count}"
+        )
+    return vals
+
+
+def decode_runs(runs) -> dict[str, np.ndarray]:
+    """Bulk-decode a batch of posting-run rows — the one postings decoder.
+
+    ``runs`` is a pandas DataFrame with ``n`` (postings per run) and any of
+    the blob columns ``docs`` / ``tfs`` / ``dls`` / ``poss`` written by
+    ``index.build.pack_runs_bulk``; each present column is decoded ONCE over
+    the batch, so the per-run Python cost is a ``b"".join``. Returns flat
+    int64 arrays in run order: ``run`` (row index of each posting's run),
+    plus ``doc_id`` / ``tf`` / ``dl`` for the present streams. doc_ids are
+    rebuilt from gaps with a segmented cumsum: each run's first gap is its
+    absolute min doc_id. ``pos`` (needs ``tfs``) holds each posting's tf
+    token positions back to back; a positionless index stores empty
+    ``poss`` blobs and yields an empty ``pos``.
+    """
+    n = runs["n"].to_numpy(dtype=np.int64)
+    total = int(n.sum())
+    out = {"run": np.repeat(np.arange(len(n), dtype=np.int64), n)}
+    if "docs" in runs:
+        csum = np.cumsum(_stream(runs, "docs", total), dtype=np.uint64)
+        # subtract the running total before each run; uint64 wraps
+        # consistently, so the difference is exact
+        before = np.concatenate((np.zeros(1, dtype=np.uint64), csum))[np.cumsum(n) - n]
+        out["doc_id"] = (csum - np.repeat(before, n)).astype(np.int64)
+    if "tfs" in runs:
+        out["tf"] = _stream(runs, "tfs", total).astype(np.int64)
+    if "dls" in runs:
+        out["dl"] = _stream(runs, "dls", total).astype(np.int64)
+    if "poss" in runs:
+        pos = varbyte_decode(b"".join(runs["poss"])).astype(np.int64)
+        want = int(out["tf"].sum())
+        if pos.size and pos.size != want:
+            raise ValueError(
+                f"decode_runs: 'poss' holds {pos.size} values, expected {want}"
+            )
+        out["pos"] = pos
+    return out

@@ -24,13 +24,15 @@ def widen_for_python(df: DataFrame, key: Column | str | None = None) -> DataFram
     """Repartition ``df`` up to ``defaultParallelism`` iff it is narrower.
 
     ``key``: optional column for deterministic hash partitioning (avoids
-    the local sort a keyless round-robin repartition pays). Uses one plan
-    conversion (no job) to read the partition count — build-path cost only;
-    do not call per query.
+    the local sort a keyless round-robin repartition pays). Reading the
+    partition count costs one plan conversion (analysis + physical
+    planning, no job) on the driver at every call, including the per-query
+    call sites in the dedup, similarity and semantic operators; the extra
+    parallelism outweighs it there. Without RDD or SparkContext access
+    (Spark Connect) the input passes through unchanged.
     """
-    spark = df.sparkSession
-    par = spark.sparkContext.defaultParallelism
     try:
+        par = df.sparkSession.sparkContext.defaultParallelism
         nparts = df.rdd.getNumPartitions()
     except Exception:  # pragma: no cover - exotic plans; keep the input
         return df

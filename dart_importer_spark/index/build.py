@@ -53,6 +53,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -491,11 +492,20 @@ def bucket_of(term: str, n_buckets: int) -> int:
     return zlib.crc32(term.encode("utf-8")) % n_buckets
 
 
-def read_manifests(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    try:
-        return spark.read.parquet(f"{out_dir}/manifests")
-    except Exception:
+def read_if_written(spark: SparkSession, path: str) -> DataFrame | None:
+    """A small index metadata table (manifests, tombstones): None when it
+    was never written (the directory is absent or holds no ``.parquet``
+    file), else the read. Read errors propagate: an unreadable table must
+    fail the caller, not pass for an empty one."""
+    if not os.path.isdir(path) or not any(
+        f.endswith(".parquet") for f in os.listdir(path)
+    ):
         return None
+    return spark.read.parquet(path)
+
+
+def read_manifests(spark: SparkSession, out_dir: str) -> DataFrame | None:
+    return read_if_written(spark, os.path.join(out_dir, "manifests"))
 
 
 def _read_meta(out_dir: str) -> dict | None:
@@ -860,9 +870,12 @@ def _build_segments(
                 .parquet(f"{out_dir}/postings")
             )
 
+        # pool threads do not inherit Spark local properties (job group,
+        # scheduler pool) or session tags: the wrapper carries the caller's
+        carry = inheritable_thread_target(spark)
         with ThreadPoolExecutor(max_workers=2) as pool:
-            f_stats = pool.submit(_write_doc_stats)
-            f_post = pool.submit(_write_postings)
+            f_stats = pool.submit(carry(_write_doc_stats))
+            f_post = pool.submit(carry(_write_postings))
             f_stats.result()
             f_post.result()
         phases["doc_stats_and_encode_write"] = round(time.time() - tp, 3)
@@ -904,12 +917,14 @@ def _build_segments(
                 .parquet(f"{out_dir}/term_seg_df")
             )
 
+        carry = inheritable_thread_target(spark)
         with ThreadPoolExecutor(max_workers=3) as pool:
             fs = [
-                pool.submit(_write_seg_df),
+                pool.submit(carry(_write_seg_df)),
                 # corpus_stats reads the already-written doc_stats
                 pool.submit(
-                    write_corpus_stats, spark, out_dir, len(field_sources)
+                    carry(write_corpus_stats),
+                    spark, out_dir, len(field_sources),
                 ),
             ]
             if full_build:
@@ -917,8 +932,8 @@ def _build_segments(
                 # straight from memory, concurrently with the partial write
                 fs.append(
                     pool.submit(
-                        publish_term_dict, spark, out_dir, cfg.n_buckets,
-                        seg_df=seg_df,
+                        carry(publish_term_dict),
+                        spark, out_dir, cfg.n_buckets, seg_df=seg_df,
                     )
                 )
             for f in fs:

@@ -36,11 +36,17 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.codec import varbyte_decode
-from .build import POSTINGS_SCHEMA, pack_runs_bulk, write_corpus_stats
+from ..functions.codec import decode_runs
+from .build import (
+    POSTINGS_SCHEMA,
+    pack_runs_bulk,
+    read_if_written,
+    read_manifests,
+    write_corpus_stats,
+)
 
 MERGED_SEG = -1  # seg id marking post-compaction runs
 
@@ -78,33 +84,21 @@ def _explode_runs(batches) -> "Iterator[pd.DataFrame]":
     for pdf in batches:
         if not len(pdf):
             continue
-        n_arr = pdf["n"].to_numpy(dtype=np.int64)
-        gaps = varbyte_decode(b"".join(pdf["docs"])).astype(np.int64)
-        tfs = varbyte_decode(b"".join(pdf["tfs"])).astype(np.int64)
-        dls = varbyte_decode(b"".join(pdf["dls"])).astype(np.int64)
-        run_starts = np.zeros(len(pdf), dtype=np.int64)
-        np.cumsum(n_arr[:-1], out=run_starts[1:])
-        csum = np.cumsum(gaps)
-        base = csum[run_starts] - gaps[run_starts]
-        docs = csum - np.repeat(base, n_arr)
-        poss_blob = b"".join(pdf["poss"]) if "poss" in pdf.columns else b""
-        if poss_blob:
-            poss = varbyte_decode(poss_blob).astype(np.int64)
+        dec = decode_runs(pdf)
+        run, tfs = dec["run"], dec["tf"]
+        if dec["pos"].size:
             # per-posting position sublists (token space = cumulative tf)
-            plists = np.split(poss, np.cumsum(tfs)[:-1])
-            plists = [x.tolist() for x in plists]
+            plists = [x.tolist() for x in np.split(dec["pos"], np.cumsum(tfs)[:-1])]
         else:
-            plists = [[] for _ in range(len(docs))]
+            plists = [[] for _ in range(len(run))]
         yield pd.DataFrame(
             {
-                "field": np.repeat(pdf["field"].to_numpy(dtype=np.int32), n_arr),
-                "term": np.repeat(pdf["term"].to_numpy(dtype=object), n_arr),
-                "mgrp": np.repeat(
-                    pdf["mgrp"].to_numpy(dtype=np.int32), n_arr
-                ),
-                "doc_id": docs,
+                "field": pdf["field"].to_numpy(dtype=np.int32)[run],
+                "term": pdf["term"].to_numpy(dtype=object)[run],
+                "mgrp": pdf["mgrp"].to_numpy(dtype=np.int32)[run],
+                "doc_id": dec["doc_id"],
                 "tf": tfs,
-                "dl": dls,
+                "dl": dec["dl"],
                 "poss": plists,
             }
         )
@@ -195,16 +189,6 @@ def _pack_positions_from_stream(poss, tfs_sorted, starts, ends):
     ]
 
 
-def _read_tombstones(spark: SparkSession, index_dir: str) -> DataFrame | None:
-    path = os.path.join(index_dir, "tombstones")
-    if not os.path.isdir(path):
-        return None
-    try:
-        return spark.read.parquet(path)
-    except Exception:
-        return None
-
-
 def compact_index(
     spark: SparkSession,
     index_dir: str,
@@ -232,7 +216,7 @@ def compact_index(
     if "poss" not in post.columns:  # pre-positions layout
         post = post.withColumn("poss", F.lit(b""))
     doc_stats = spark.read.parquet(f"{index_dir}/doc_stats")
-    tomb = _read_tombstones(spark, index_dir)
+    tomb = read_if_written(spark, os.path.join(index_dir, "tombstones"))
     tomb_df = None
     tomb_n = 0
     if tomb is not None:
@@ -266,13 +250,11 @@ def compact_index(
     )
 
     def merge_partition(batches) -> "Iterator[pd.DataFrame]":
-        """Partition-level merger, fully vectorized: the partition's run
-        blobs are decoded in ONE varbyte pass over the concatenated byte
-        streams (varbyte is self-delimiting), doc gaps are rebuilt with a
-        segmented cumsum, postings are lexsorted by (group, doc), tombstones
-        dropped, and everything re-packed with ``pack_runs_bulk``. Per-run
-        python overhead ~0: decisive when the local-segment build emits one
-        small run per (partition, term)."""
+        """Partition-level merger, fully vectorized: the partition's runs
+        are decoded in one ``decode_runs`` call, postings are lexsorted by
+        (group, doc), tombstones dropped, and everything re-packed with
+        ``pack_runs_bulk``. Per-run python overhead ~0: decisive when the
+        local-segment build emits one small run per (partition, term)."""
         dead = bc_tomb.value
         parts = [b for b in batches if len(b)]
         if not parts:
@@ -281,7 +263,6 @@ def compact_index(
         flds = pdf["field"].to_numpy(dtype=np.int32)
         terms = pdf["term"].to_numpy(dtype=object)
         mgrps = pdf["mgrp"].to_numpy(dtype=np.int64)
-        n_arr = pdf["n"].to_numpy(dtype=np.int64)
         n_runs = len(pdf)
         # run -> merge-group id (runs arrive sorted by (field, term, mgrp))
         g_change = np.empty(n_runs, dtype=bool)
@@ -292,32 +273,16 @@ def compact_index(
             | (mgrps[1:] != mgrps[:-1])
         )
         grp_run = np.cumsum(g_change) - 1
-        n_groups = int(grp_run[-1]) + 1
         first_run = np.flatnonzero(g_change)  # first run index of each group
 
-        # bulk decode: one pass over the concatenated streams
-        gaps = varbyte_decode(b"".join(pdf["docs"])).astype(np.int64)
-        tfs = varbyte_decode(b"".join(pdf["tfs"])).astype(np.int64)
-        dls = varbyte_decode(b"".join(pdf["dls"])).astype(np.int64)
-        run_starts = np.zeros(n_runs, dtype=np.int64)
-        np.cumsum(n_arr[:-1], out=run_starts[1:])
-        # segmented cumsum: each run's first gap is its absolute min doc_id
-        csum = np.cumsum(gaps)
-        base = csum[run_starts] - gaps[run_starts]
-        docs = csum - np.repeat(base, n_arr)
-
-        poss_blob = b"".join(pdf["poss"]) if "poss" in pdf.columns else b""
-        poss = (
-            varbyte_decode(poss_blob).astype(np.int64)
-            if poss_blob
-            else np.empty(0, dtype=np.int64)
-        )
+        dec = decode_runs(pdf)
+        docs, tfs, dls, poss = dec["doc_id"], dec["tf"], dec["dl"], dec["pos"]
         # per-posting token offsets in the pre-sort stream (token = sum tf)
         if poss.size:
             tok_start = np.zeros(len(tfs), dtype=np.int64)
             np.cumsum(tfs[:-1], out=tok_start[1:])
 
-        grp_post = np.repeat(grp_run, n_arr)
+        grp_post = grp_run[dec["run"]]
         order = np.lexsort((docs, grp_post))
         docs, tfs_o, dls, grp_post = (
             docs[order], tfs[order], dls[order], grp_post[order],
@@ -433,11 +398,7 @@ def compact_index(
         json.dump({**meta, "compacted": True, "target_run": target_run}, f)
 
     # lineage: compaction manifest row (same table as build manifests)
-    prev = None
-    try:
-        prev = spark.read.parquet(f"{index_dir}/manifests")
-    except Exception:
-        pass
+    prev = read_manifests(spark, index_dir)
     n_docs = int(ds_out.count())
     n_runs = int(post_out.count())
     row = pd.DataFrame(

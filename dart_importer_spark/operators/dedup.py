@@ -483,9 +483,13 @@ def simhash_candidate_pairs(
         )
     cw = (n_bits + n_chunks - 1) // n_chunks  # chunk width
     mask = (1 << cw) - 1
+    # caller column names enter SQL and F.col quoted, backticks doubled
+    q_id, q_hash = (
+        "`" + c.replace("`", "``") + "`" for c in (id_col, hash_col)
+    )
 
     def chunk_sql(i):
-        return f"(shiftrightunsigned(`{hash_col}`, {cw * i}) & {mask}L)"
+        return f"(shiftrightunsigned({q_hash}, {cw * i}) & {mask}L)"
 
     # one exploded (id, hash, band, key) table and ONE self-join on
     # (band, key) — NOT a join per subset: N unioned joins would recompute
@@ -503,14 +507,10 @@ def simhash_candidate_pairs(
         band_terms.append(f"struct({si} as band, ({key}) as bk)")
     bands = F.expr("array(" + ", ".join(band_terms) + ")")
     banded = sim.select(
-        id_col, hash_col, F.explode(bands).alias("b")
-    ).select(id_col, hash_col, F.col("b.band").alias("band"), F.col("b.bk").alias("bk"))
-    a = banded.select(
-        F.col(id_col).alias("a"), F.col(hash_col).alias("ha"), "band", "bk"
-    )
-    b = banded.select(
-        F.col(id_col).alias("b"), F.col(hash_col).alias("hb"), "band", "bk"
-    )
+        F.col(q_id).alias("id"), F.col(q_hash).alias("h"), F.explode(bands).alias("b")
+    ).select("id", "h", F.col("b.band").alias("band"), F.col("b.bk").alias("bk"))
+    a = banded.select(F.col("id").alias("a"), F.col("h").alias("ha"), "band", "bk")
+    b = banded.select(F.col("id").alias("b"), F.col("h").alias("hb"), "band", "bk")
     return (
         a.join(b, ["band", "bk"])
         .filter(F.col("a") < F.col("b"))

@@ -853,6 +853,8 @@ class IvfAnnIndex:
             if quantize:
                 from concurrent.futures import ThreadPoolExecutor
 
+                from pyspark import inheritable_thread_target
+
                 id_col, vec_col = self.id_col, self.vec_col
                 norm = F.sqrt(
                     F.aggregate(
@@ -915,9 +917,10 @@ class IvfAnnIndex:
 
                 # both branches read the cached list table and write
                 # disjoint directories — overlap them (guide §2.6)
+                carry = inheritable_thread_target(self.table.sparkSession)
                 with ThreadPoolExecutor(max_workers=2) as pool:
-                    fl = pool.submit(_write_lists)
-                    fq = pool.submit(_write_quantized)
+                    fl = pool.submit(carry(_write_lists))
+                    fq = pool.submit(carry(_write_quantized))
                     fl.result()
                     fq.result()
                 self._path = path

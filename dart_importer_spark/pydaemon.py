@@ -71,8 +71,8 @@ except Exception:  # pragma: no cover - future-pyspark fallback
 try:  # patch 2: freeze the post-import heap after the first task
     _orig_worker = _daemon.worker
 
-    def _freezing_worker(sock, authenticated):
-        code = _orig_worker(sock, authenticated)
+    def _freezing_worker(*args, **kwargs):
+        code = _orig_worker(*args, **kwargs)
         if not getattr(_freezing_worker, "_frozen", False):
             gc.collect()
             gc.freeze()

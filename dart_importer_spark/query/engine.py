@@ -16,9 +16,12 @@ quantization — we keep exact doc lengths):
 Physical plan, per query:
   tokenize query (driver) -> partition-pruned postings scan (bucket =
   crc32(term) % n_buckets prunes directories; term predicate pushed into
-  parquet row-group stats) -> vectorized decode+score (mapInPandas, numpy)
-  with block-max pruning -> groupBy(doc_id).sum (partial agg map-side)
-  -> TakeOrderedAndProject(score desc, doc_id asc, k).
+  parquet row-group stats) -> block-max skipping, then the one bulk postings
+  decoder (``codec.decode_runs``, one numpy pass per blob column per Arrow
+  batch) and BM25 arithmetic in mapInPandas -> groupBy(doc_id).sum (partial
+  agg map-side) -> TakeOrderedAndProject(score desc, doc_id asc, k). Every
+  other postings read (doc-id sets, positions, per-field dl, term/doc
+  pairs) is the same decoder behind ``InvertedIndex._read_postings``.
 
 Block-max pruning (the distributed adaptation of block-max WAND): a first
 cheap pass fully scores the rarest query term's postings and takes its k-th
@@ -42,10 +45,10 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from ..functions.codec import delta_decode, varbyte_decode
+from ..functions.codec import decode_runs
 from ..functions.localrel import lit_double_array, local_df
 from ..functions.tokenizer import tokenize_text
-from ..index.build import B, BLOCK_SIZE, K1, bucket_of
+from ..index.build import B, BLOCK_SIZE, K1, bucket_of, read_if_written
 
 SCORED_SCHEMA = "doc_id long, score double, matched int"
 
@@ -58,6 +61,32 @@ def _member(docs: np.ndarray, sorted_ids: np.ndarray) -> np.ndarray:
     idx = np.searchsorted(sorted_ids, docs)
     idx[idx == sorted_ids.size] = 0  # past-the-end can never match [0]
     return sorted_ids[idx] == docs
+
+
+def _decode_masked(
+    runs: pd.DataFrame,
+    dead: np.ndarray | None = None,
+    allowed: np.ndarray | None = None,
+    keep: np.ndarray | None = None,
+) -> dict[str, np.ndarray]:
+    """:func:`decode_runs` with the postings masks applied right after
+    decode: ``keep`` (per posting, e.g. block-max survivors), ``dead``
+    (sorted tombstoned or excluded ids) and ``allowed`` (sorted ids that
+    pass the filter). Positions follow their posting."""
+    dec = decode_runs(runs)
+    if dead is not None:
+        m = ~_member(dec["doc_id"], dead)
+        keep = m if keep is None else keep & m
+    if allowed is not None:
+        m = _member(dec["doc_id"], allowed)
+        keep = m if keep is None else keep & m
+    if keep is None or keep.all():
+        return dec
+    out = {c: v[keep] for c, v in dec.items() if c != "pos"}
+    if "pos" in dec:
+        pos = dec["pos"]
+        out["pos"] = pos[np.repeat(keep, dec["tf"])] if pos.size else pos
+    return out
 
 
 def categorize_key(col: Column, max_tokens: int = 5) -> Column:
@@ -173,6 +202,28 @@ def _tfn(tf, dl, avgdl: float):
     return tf / (tf + K1 * (1.0 - B + B * (dl / avgdl)))
 
 
+def _surviving_blocks(runs, idf_map, ubs, ub_total, theta, avgdl):
+    """Block-max skipping ahead of decode: a block survives when
+    idf·tfn(max_tf, min_dl) + the other terms' bounds can reach θ. Returns
+    the runs holding a surviving block and a per-posting keep mask over
+    them; block of a posting = (position in run) // BLOCK_SIZE."""
+    n = runs["n"].to_numpy(dtype=np.int64)
+    nb = (n + BLOCK_SIZE - 1) // BLOCK_SIZE
+    t_idf = runs["term"].map(idf_map).to_numpy(dtype=np.float64)
+    others = ub_total - runs["term"].map(lambda t: ubs.get(t, 0.0)).to_numpy(
+        dtype=np.float64
+    )
+    bmax_tf = np.concatenate(runs["block_max_tf"].tolist()).astype(np.float64)
+    bmin_dl = np.concatenate(runs["block_min_dl"].tolist()).astype(np.float64)
+    block_ub = np.repeat(t_idf, nb) * _tfn(bmax_tf, bmin_dl, avgdl)
+    block_keep = block_ub + np.repeat(others, nb) >= theta
+    first_block = np.cumsum(nb) - nb
+    in_run = np.arange(int(n.sum()), dtype=np.int64) - np.repeat(np.cumsum(n) - n, n)
+    keep = block_keep[np.repeat(first_block, n) + in_run // BLOCK_SIZE]
+    live = np.logical_or.reduceat(block_keep, first_block)
+    return runs[live], keep[np.repeat(live, n)]
+
+
 class InvertedIndex:
     """Handle over an on-disk index directory produced by ``build_index``.
 
@@ -263,13 +314,8 @@ class InvertedIndex:
             return (
                 self.spark.read.parquet(*pit).select("doc_id").distinct()
             )
-        path = os.path.join(self.dir, "tombstones")
-        if not os.path.isdir(path):
-            return None
-        try:
-            return self.spark.read.parquet(path).select("doc_id").distinct()
-        except Exception:
-            return None
+        tomb = read_if_written(self.spark, os.path.join(self.dir, "tombstones"))
+        return None if tomb is None else tomb.select("doc_id").distinct()
 
     def open_pit(self) -> dict:
         """ES ``open point in time``: freeze the search view. Segments are
@@ -702,17 +748,10 @@ class InvertedIndex:
         avgdl: float | None = None,
         extra_ub: float = 0.0,
         keep_term: bool = False,
-        keep_tf: bool = False,
-        keep_dl: bool = False,
-        raw_decode: bool = False,
     ) -> DataFrame:
         """Vectorized decode + BM25 partial scoring with block-max skipping.
         ``keep_term=True`` emits the contributing term per row (the batched
         multi-query path joins contributions back to per-query term sets).
-        ``raw_decode=True`` skips the per-posting BM25 arithmetic and emits
-        score=0.0 — for consumers that only want the decoded (term, doc,
-        tf, dl) rows (match_synonyms re-scores per GROUP after summing tf
-        across members, so per-term contributions would be discarded).
 
         ``dead`` / ``allowed`` are sorted doc_id arrays broadcast into the
         kernel: postings for tombstoned (dead) or filtered-out (not in
@@ -728,68 +767,41 @@ class InvertedIndex:
         # per-term global upper bounds for the pruning inequality
         ubs = dict(ubs or {})
         ub_total = (sum(ubs.values()) + extra_ub) if theta > 0.0 else 0.0
-        sc = self.spark.sparkContext
-        bc_dead = sc.broadcast(dead) if dead is not None and dead.size else None
-        bc_allowed = sc.broadcast(allowed) if allowed is not None else None
+        bc_dead = self._bc_ids(dead if dead is not None and dead.size else None)
+        bc_allowed = self._bc_ids(allowed)
 
         def score_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             dead_ids = bc_dead.value if bc_dead is not None else None
             allowed_ids = bc_allowed.value if bc_allowed is not None else None
             for pdf in batches:
-                outs = []
-                for row in pdf.itertuples(index=False):
-                    t_idf = idf_map[row.term]
-                    others_ub = ub_total - ubs.get(row.term, 0.0) if theta > 0.0 else 0.0
-                    bmax_tf = np.asarray(row.block_max_tf, dtype=np.float64)
-                    bmin_dl = np.asarray(row.block_min_dl, dtype=np.float64)
-                    if theta > 0.0:
-                        block_ub = t_idf * _tfn(bmax_tf, bmin_dl, avgdl) + others_ub
-                        keep = block_ub >= theta
-                        if not keep.any():
-                            continue
-                    else:
-                        keep = np.ones(len(bmax_tf), dtype=bool)
-                    docs = delta_decode(row.docs).astype(np.int64)
-                    tfs = varbyte_decode(row.tfs).astype(np.float64)
-                    dls = varbyte_decode(row.dls).astype(np.float64)
-                    if not keep.all():
-                        mask = np.repeat(keep, BLOCK_SIZE)[: docs.size]
-                        docs, tfs, dls = docs[mask], tfs[mask], dls[mask]
-                    if dead_ids is not None and docs.size:
-                        m = ~_member(docs, dead_ids)
-                        docs, tfs, dls = docs[m], tfs[m], dls[m]
-                    if allowed_ids is not None and docs.size:
-                        m = _member(docs, allowed_ids)
-                        docs, tfs, dls = docs[m], tfs[m], dls[m]
-                    if docs.size == 0:
-                        continue
-                    if raw_decode:
-                        contrib = np.zeros(docs.size, dtype=np.float64)
-                    else:
-                        contrib = t_idf * _tfn(tfs, dls, avgdl)
-                    cols = {
-                        "doc_id": docs,
-                        "score": contrib,
-                        "matched": np.ones(docs.size, dtype=np.int32),
-                    }
-                    if keep_term:
-                        cols = {"term": row.term, **cols}
-                    if keep_tf:
-                        cols["tf"] = tfs
-                    if keep_dl:
-                        cols["dl"] = dls
-                    outs.append(pd.DataFrame(cols))
-                if outs:
-                    yield pd.concat(outs, ignore_index=True)
+                keep = None
+                if theta > 0.0 and len(pdf):
+                    pdf, keep = _surviving_blocks(
+                        pdf, idf_map, ubs, ub_total, theta, avgdl
+                    )
+                dec = _decode_masked(pdf, dead_ids, allowed_ids, keep)
+                run = dec["run"]
+                if not run.size:
+                    continue
+                t_idf = pdf["term"].map(idf_map).to_numpy(dtype=np.float64)
+                cols = {
+                    "doc_id": dec["doc_id"],
+                    "score": t_idf[run] * _tfn(
+                        dec["tf"].astype(np.float64),
+                        dec["dl"].astype(np.float64),
+                        avgdl,
+                    ),
+                    "matched": np.ones(run.size, dtype=np.int32),
+                }
+                if keep_term:
+                    cols = {"term": pdf["term"].to_numpy(dtype=object)[run], **cols}
+                yield pd.DataFrame(cols)
 
         schema = ("term string, " + SCORED_SCHEMA) if keep_term else SCORED_SCHEMA
-        if keep_tf:
-            schema = schema + ", tf double"
-        if keep_dl:
-            schema = schema + ", dl double"
-        return cand.select(
-            "term", "docs", "tfs", "dls", "block_max_tf", "block_min_dl"
-        ).mapInPandas(score_batches, schema=schema)
+        blocks = ["block_max_tf", "block_min_dl"] if theta > 0.0 else []
+        return cand.select("term", "n", "docs", "tfs", "dls", *blocks).mapInPandas(
+            score_batches, schema=schema
+        )
 
     # ------------------------------------------------- non-scoring query ops
     def match_all(self) -> DataFrame:
@@ -1428,21 +1440,58 @@ class InvertedIndex:
         )
         return post.join(F.broadcast(terms_df), keys, "left_semi")
 
-    def _decode_doc_ids(self, cand: DataFrame) -> DataFrame:
-        """Distinct live doc_ids of a candidate posting-run scan."""
+    _POSTING_COLS = {
+        "term": ("term", "term string"),
+        "doc_id": ("docs", "doc_id long"),
+        "tf": ("tfs", "tf long"),
+        "dl": ("dls", "dl long"),
+        "pos": ("poss", "pos long"),
+    }
+
+    def _read_postings(
+        self,
+        cand: DataFrame,
+        cols: Sequence[str],
+        allowed=None,
+    ) -> DataFrame:
+        """The postings read: ``cols`` (of term, doc_id, tf, dl, pos)
+        decoded from a candidate posting-run scan, one row per posting, or
+        one per token position when ``pos`` is asked for. Only the blob
+        columns ``cols`` need are scanned, and each is decoded once per
+        Arrow batch (:func:`decode_runs`). ``allowed`` (a sorted doc_id
+        array, or a Broadcast of one shared by a query's per-term scans)
+        masks right after decode; callers drop tombstones with ``_live``."""
+        cols = list(cols)
+        need = {"n", "docs"} | {self._POSTING_COLS[c][0] for c in cols}
+        if "pos" in cols:
+            need.add("tfs")
+        bc_allowed = self._bc_ids(allowed)
 
         def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+            allowed_ids = bc_allowed.value if bc_allowed is not None else None
             for pdf in batches:
-                outs = [
-                    pd.DataFrame({"doc_id": delta_decode(r.docs).astype(np.int64)})
-                    for r in pdf.itertuples(index=False)
-                ]
-                if outs:
-                    yield pd.concat(outs, ignore_index=True)
+                dec = _decode_masked(pdf, allowed=allowed_ids)
+                if "pos" in cols:
+                    if not dec["pos"].size:
+                        continue  # positionless runs carry empty poss blobs
+                    tf = dec["tf"]
+                    dec = {
+                        c: dec[c] if c == "pos" else np.repeat(dec[c], tf)
+                        for c in ("run", *cols)
+                        if c in dec
+                    }
+                if "term" in cols:
+                    dec["term"] = pdf["term"].to_numpy(dtype=object)[dec["run"]]
+                if dec["run"].size:
+                    yield pd.DataFrame({c: dec[c] for c in cols})
 
-        return self._live(
-            cand.select("docs").mapInPandas(decode, schema="doc_id long").distinct()
+        return cand.select(*sorted(need)).mapInPandas(
+            decode, schema=", ".join(self._POSTING_COLS[c][1] for c in cols)
         )
+
+    def _decode_doc_ids(self, cand: DataFrame) -> DataFrame:
+        """Distinct live doc_ids of a candidate posting-run scan."""
+        return self._live(self._read_postings(cand, ["doc_id"]).distinct())
 
     def _docs_for_terms(self, terms: list[str], fid: int = 0) -> DataFrame:
         """Distinct doc_ids containing any of ``terms`` (constant score) —
@@ -1885,7 +1934,10 @@ class InvertedIndex:
         stopword's full positional postings — only positions inside docs that
         contain the rarest phrase term survive (ES's doc-at-a-time phrase
         intersection starts from the rarest term for the same reason)."""
-        return self._decode_positions(self._candidate_postings(terms, fid), allowed)
+        return self._read_postings(
+            self._candidate_postings(terms, fid), ["term", "doc_id", "pos"],
+            allowed=allowed,
+        )
 
     def _positions_for_terms_df(
         self, terms_df: DataFrame, fid: int, allowed=None
@@ -1893,55 +1945,9 @@ class InvertedIndex:
         """Positional scan for an EXPANDED term set (match_phrase_prefix's
         last-term rewrite): the expansion stays a broadcast semi-join, same
         as wildcard/fuzzy."""
-        return self._decode_positions(
-            self._candidate_postings_df(terms_df, fid), allowed
-        )
-
-    def _decode_positions(
-        self, cand: DataFrame, allowed=None
-    ) -> DataFrame:
-        # ``allowed``: a sorted doc_id ndarray OR an already-built Broadcast
-        # of one — phrase/span callers broadcast the candidate mask ONCE and
-        # pass the handle into every per-term scan (n scans would otherwise
-        # re-ship an up-to-id_push_budget-sized array n times)
-        from pyspark.broadcast import Broadcast
-
-        sc = self.spark.sparkContext
-        if isinstance(allowed, Broadcast):
-            bc_allowed = allowed
-        else:
-            bc_allowed = sc.broadcast(allowed) if allowed is not None else None
-
-        def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            allow = bc_allowed.value if bc_allowed is not None else None
-            for pdf in batches:
-                outs = []
-                for row in pdf.itertuples(index=False):
-                    if not row.poss:
-                        continue
-                    docs = delta_decode(row.docs).astype(np.int64)
-                    tfs = varbyte_decode(row.tfs).astype(np.int64)
-                    poss = varbyte_decode(row.poss).astype(np.int64)
-                    if allow is not None:
-                        m = _member(docs, allow)
-                        if not m.any():
-                            continue
-                        poss = poss[np.repeat(m, tfs)]
-                        docs, tfs = docs[m], tfs[m]
-                    outs.append(
-                        pd.DataFrame(
-                            {
-                                "term": row.term,
-                                "doc_id": np.repeat(docs, tfs),
-                                "pos": poss,
-                            }
-                        )
-                    )
-                if outs:
-                    yield pd.concat(outs, ignore_index=True)
-
-        return cand.select("term", "docs", "tfs", "poss").mapInPandas(
-            decode, schema="term string, doc_id long, pos long"
+        return self._read_postings(
+            self._candidate_postings_df(terms_df, fid), ["term", "doc_id", "pos"],
+            allowed=allowed,
         )
 
     def _phrase_candidate_ids(
@@ -1972,12 +1978,13 @@ class InvertedIndex:
         return ids, False, dfs
 
     def _bc_ids(self, ids):
-        """Broadcast a candidate-id mask ONCE for reuse across the
-        per-term positional scans of one query (None passes through)."""
-        return (
-            self.spark.sparkContext.broadcast(ids)
-            if ids is not None else None
-        )
+        """Broadcast a sorted id mask ONCE for reuse across the per-term
+        scans of one query (None and an existing Broadcast pass through)."""
+        from pyspark.broadcast import Broadcast
+
+        if ids is None or isinstance(ids, Broadcast):
+            return ids
+        return self.spark.sparkContext.broadcast(ids)
 
     def _phrase_starts(self, terms, fid, bc_cand) -> DataFrame:
         """(doc_id, pos) of every EXACT-phrase match start — the shared
@@ -2092,34 +2099,11 @@ class InvertedIndex:
         non-primary fields, whose per-doc dl is not in doc_stats; the
         caller picks a term every result doc is guaranteed to contain
         (for a phrase: any of its terms). ``allowed`` masks right after
-        decode, same contract as _decode_positions."""
-        from pyspark.broadcast import Broadcast
-
-        sc = self.spark.sparkContext
-        if isinstance(allowed, Broadcast):
-            bc_allowed = allowed
-        else:
-            bc_allowed = sc.broadcast(allowed) if allowed is not None else None
-
-        def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            allow = bc_allowed.value if bc_allowed is not None else None
-            for pdf in batches:
-                outs = []
-                for row in pdf.itertuples(index=False):
-                    docs = delta_decode(row.docs).astype(np.int64)
-                    dls = varbyte_decode(row.dls).astype(np.float64)
-                    if allow is not None:
-                        m = _member(docs, allow)
-                        if not m.any():
-                            continue
-                        docs, dls = docs[m], dls[m]
-                    outs.append(pd.DataFrame({"doc_id": docs, "dl": dls}))
-                if outs:
-                    yield pd.concat(outs, ignore_index=True)
-
-        return self._candidate_postings([term], fid).select(
-            "docs", "dls"
-        ).mapInPandas(decode, schema="doc_id long, dl double")
+        decode, same contract as _positions_for_terms."""
+        return self._read_postings(
+            self._candidate_postings([term], fid), ["doc_id", "dl"],
+            allowed=allowed,
+        )
 
     def _phrase_scores(
         self, query: str, fid: int, slop: int = 0
@@ -5779,19 +5763,12 @@ class InvertedIndex:
         if not live_terms:
             return local_df(self.spark, [], "doc_id long, score double")
         avgdl = self.avgdl_by_field[fid]
-        # decode-only pass: rows carry raw (term, doc, tf, dl); raw_decode
-        # skips the per-posting BM25 arithmetic whose contributions this
-        # path would discard (scoring happens per GROUP below, after tf
-        # is summed across synonym members)
+        # decode-only pass: raw (term, doc, tf, dl) rows — scoring happens
+        # per GROUP below, after tf is summed across synonym members
         raw = self._live(
-            self._score_terms(
-                live_terms,
-                {t: 1.0 for t in live_terms},
-                fid=fid,
-                keep_term=True,
-                keep_tf=True,
-                keep_dl=True,
-                raw_decode=True,
+            self._read_postings(
+                self._candidate_postings(live_terms, fid),
+                ["term", "doc_id", "tf", "dl"],
             )
         )
         group_idf = {
@@ -6109,9 +6086,8 @@ class InvertedIndex:
             return local_df(self.spark, [], "doc_id long, score double")
         legs = []
         for fid, w, _ in parsed:
-            raw = self._score_terms(
-                terms, {t: 1.0 for t in terms}, fid=fid, keep_term=True,
-                keep_tf=True, raw_decode=True,
+            raw = self._read_postings(
+                self._candidate_postings(terms, fid), ["term", "doc_id", "tf"]
             )
             legs.append(
                 raw.select(
@@ -6569,27 +6545,10 @@ class InvertedIndex:
             return local_df(self.spark, [], out_schema)
         allowed = self._bounded_ids(docs)
 
-        cand = self.postings().filter(F.col("field") == fid)
-        sc = self.spark.sparkContext
-        bc_allowed = sc.broadcast(allowed) if allowed is not None else None
-
-        def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            allow = bc_allowed.value if bc_allowed is not None else None
-            for pdf in batches:
-                outs = []
-                for r in pdf.itertuples(index=False):
-                    ids = delta_decode(r.docs).astype(np.int64)
-                    if allow is not None:
-                        ids = ids[_member(ids, allow)]
-                    if ids.size:
-                        outs.append(
-                            pd.DataFrame({"term": r.term, "doc_id": ids})
-                        )
-                if outs:
-                    yield pd.concat(outs, ignore_index=True)
-
-        pairs = cand.select("term", "docs").mapInPandas(
-            decode, schema="term string, doc_id long"
+        pairs = self._read_postings(
+            self.postings().filter(F.col("field") == fid),
+            ["term", "doc_id"],
+            allowed=allowed,
         )
         if allowed is None:  # over budget: distributed semi-join instead
             pairs = pairs.join(docs.select("doc_id"), "doc_id", "left_semi")
@@ -6669,23 +6628,7 @@ class InvertedIndex:
         (term, doc_id) pairs — the pair-preserving sibling of
         ``_decode_doc_ids`` (graph explore needs to know WHICH seed a doc
         came from, not just the union)."""
-
-        def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                outs = []
-                for r in pdf.itertuples(index=False):
-                    ids = delta_decode(r.docs).astype(np.int64)
-                    outs.append(
-                        pd.DataFrame({"term": r.term, "doc_id": ids})
-                    )
-                if outs:
-                    yield pd.concat(outs, ignore_index=True)
-
-        return self._live(
-            cand.select("term", "docs")
-            .mapInPandas(decode, schema="term string, doc_id long")
-            .distinct()
-        )
+        return self._live(self._read_postings(cand, ["term", "doc_id"]).distinct())
 
     def graph_explore(
         self,

@@ -72,6 +72,18 @@ def test_simhash_chunk_validation(spark, sim_df):
         dedup.simhash_candidate_pairs(df, max_hamming=3, n_chunks=3)
 
 
+def test_simhash_pairs_accept_backtick_column_names(spark, sim_df):
+    df, _ = sim_df
+    odd = df.select(
+        F.col("doc_id").alias("doc`id"), F.col("simhash").alias("sim`hash")
+    )
+    got = dedup.simhash_candidate_pairs(
+        odd, id_col="doc`id", hash_col="sim`hash", max_hamming=3
+    ).collect()
+    want = dedup.simhash_candidate_pairs(df, max_hamming=3).collect()
+    assert want and sorted(got) == sorted(want)
+
+
 def test_minhash_lsh_reports_oversized_buckets(spark):
     rows = [(i, "common boilerplate text shared by every doc") for i in range(80)]
     rows += [(100, "a unique pair of documents here now one"),

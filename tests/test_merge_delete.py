@@ -198,3 +198,39 @@ def test_pit_in_search_body(spark, built_index, tmp_path):
     assert {r["doc_id"] for r in pinned.collect()} == before
     with pytest.raises(DslError, match="pit"):
         search(ix, {**body, "pit": {"id": "not-a-snapshot"}})
+
+
+def _corrupt_parquet_files(table_dir, first_only=False):
+    """Overwrite a table's parquet data files with junk (and drop their
+    checksum sidecars, so the parquet reader itself sees the junk)."""
+    import os
+
+    names = sorted(f for f in os.listdir(table_dir) if f.endswith(".parquet"))
+    assert names
+    for name in names[:1] if first_only else names:
+        with open(os.path.join(table_dir, name), "wb") as f:
+            f.write(b"not a parquet file")
+        crc = os.path.join(table_dir, f".{name}.crc")
+        if os.path.exists(crc):
+            os.remove(crc)
+
+
+def test_corrupt_tombstone_file_raises(spark, mutable_index, tmp_path):
+    """An unreadable tombstone file must fail the query and the compaction
+    instead of reading as 'no deletes' and resurrecting the deleted doc."""
+    import os
+
+    ix = mutable_index
+    victim = ix.topk("the and of", k=1).collect()[0]["doc_id"]
+    assert ix.delete_by_query(F.col("doc_id") == victim) == 1
+    tdir = os.path.join(ix.dir, "tombstones")
+    _corrupt_parquet_files(tdir, first_only=True)
+    with pytest.raises(Exception):
+        ix.topk("the and of", k=25).collect()
+    with pytest.raises(Exception):
+        compact_index(spark, ix.dir, str(tmp_path / "compacted"))
+    # absent and empty tombstone directories still mean "no deletes"
+    shutil.rmtree(tdir)
+    assert ix._tombstones() is None
+    os.makedirs(tdir)
+    assert ix._tombstones() is None

@@ -112,3 +112,44 @@ def test_per_turn_text_equality_invariant(spark, transcripts_df, built_index):
 
     toks = tokenize_series(src["text"])
     assert (mapping["dl"].to_numpy() == toks.str.len().to_numpy()).all()
+
+
+def test_corrupt_manifests_make_resume_raise(spark, resume_dir, tmp_path):
+    """A never-written manifests table means 'no lineage' without a Spark
+    read; an unreadable one fails the resume instead of silently
+    rebuilding every segment."""
+    import os
+    import shutil
+
+    from dart_importer_spark.index.build import read_manifests
+
+    assert read_manifests(spark, str(tmp_path)) is None
+    out = str(tmp_path / "idx")
+    shutil.copytree(resume_dir, out)
+    mdir = os.path.join(out, "manifests")
+    for name in os.listdir(mdir):
+        path = os.path.join(mdir, name)
+        if name.endswith(".crc"):
+            os.remove(path)
+        elif name.endswith(".parquet"):
+            with open(path, "wb") as f:
+                f.write(b"not a parquet file")
+    with pytest.raises(Exception):
+        build_index(spark, generate_transcripts(spark, 150), out, CFG)
+
+
+def test_build_jobs_all_carry_the_callers_job_group(spark, tmp_path):
+    """The build's parallel writes run on pool threads; every job they
+    submit must still carry the caller's job group."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    tr = generate_transcripts(spark, 60)
+    untagged_before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("t6", "job-group attribution test")
+    try:
+        build_index(spark, tr, str(tmp_path / "idx"), CFG)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert tracker.getJobIdsForGroup("t6")
+    assert set(tracker.getJobIdsForGroup(None)) <= untagged_before
