@@ -11,8 +11,9 @@ Layout
 ------
 - ``functions``  : tokenizer + shingle analyzers (pinned spec), varbyte/delta
                    codec, portable oracle hashing
-- ``index``      : fielded index build (postings/term_dict/doc_stats/
-                   corpus_stats), lineage manifests + checkpoint-resume,
+- ``index``      : fielded index build (postings/term_dict/doc_stats),
+                   one meta.json commit record (corpus counters, lineage)
+                   + checkpoint-resume,
                    O(batch) monotone appends, segment merge/compaction
 - ``query``      : BM25 top-k (block-max pruning), fielded match, bool
                    (must+should), multi_match, match_phrase (positional),

@@ -898,10 +898,9 @@ def main(argv: list[str] | None = None) -> int:
 
         cfg = None
         if args.segments or args.buckets:
-            import json as _json
+            from .index.commit import read_meta
 
-            with open(f"{args.index}/meta.json") as fh:
-                m = _json.load(fh)
+            m = read_meta(args.index)
             cfg = BuildConfig(
                 n_segments=args.segments or int(m["n_segments"]),
                 n_buckets=args.buckets or int(m["n_buckets"]),

@@ -12,8 +12,8 @@ store would be run (one index per day/epoch, one read alias over all of
 them, one write alias rolling forward).
 
 ES keeps alias metadata in cluster state; the engine's indexes are
-directories, so the registry is ONE JSON file (atomic tmp+rename
-writes — the same torn-write discipline as the index manifests).
+directories, so the registry is ONE JSON file, replaced atomically by
+``commit.write_json`` — the writer of every index's ``meta.json``.
 Nothing in the data path reads it: resolution happens once per request
 on the driver, O(aliases), then the search fans out through the normal
 per-index machinery (`multi_index_topk`'s coordinating-node shape).
@@ -21,12 +21,13 @@ per-index machinery (`multi_index_topk`'s coordinating-node shape).
 
 from __future__ import annotations
 
-import json
 import os
 import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from .commit import read_json, write_json
 
 
 class AliasError(ValueError):
@@ -45,16 +46,10 @@ class AliasRegistry:
 
     # ------------------------------------------------------------- storage
     def _load(self) -> dict:
-        if not os.path.exists(self.path):
-            return {}
-        with open(self.path) as fh:
-            return json.load(fh)
+        return read_json(self.path) or {}
 
     def _save(self, data: dict) -> None:
-        tmp = f"{self.path}.tmp.{os.getpid()}"
-        with open(tmp, "w") as fh:
-            json.dump(data, fh, indent=1, sort_keys=True)
-        os.replace(tmp, self.path)  # atomic: readers see old or new, never torn
+        write_json(self.path, data)  # atomic: readers see old or new, never torn
 
     # ------------------------------------------------------------- actions
     def update(self, actions: list[dict]) -> None:
@@ -255,7 +250,9 @@ def rollover(
         }
     ix = InvertedIndex(spark, old)
     stats = ix.index_stats()
-    age = time.time() - os.path.getmtime(os.path.join(old, "meta.json"))
+    # the first build's commit time: appends rewrite meta.json, so its
+    # mtime would restart the clock on every batch
+    age = time.time() - ix.meta["created_ts"]
     conditions = {}
     if max_docs is not None:
         conditions[f"[max_docs: {max_docs}]"] = (

@@ -13,12 +13,13 @@ replacement. Layout on disk (parquet; Iceberg-compatible table shapes):
                          ts, dl) — metadata filters + length norms
     <out>/term_seg_df/   seg=<s>/   per-segment partial document frequencies
     <out>/term_dict/     (term, df) — global, published from partials
-    <out>/corpus_stats/  single row (n_docs, avgdl, total_tokens)
-    <out>/manifests/     per-segment lineage (FIXTURES.md T3) — the working
-                         version of the reference's dead lineage code
-                         (import_dart_data.py:606-625 builds a history dict
-                         that is never indexed; here manifests are real and
-                         drive checkpoint-resume)
+    <out>/meta.json      the commit record (``index.commit``): layout config,
+                         per-field corpus counters (n_docs, avgdl,
+                         total_tokens) and per-segment lineage (FIXTURES.md
+                         T3) — the working version of the reference's dead
+                         lineage code (import_dart_data.py:606-625 builds a
+                         history dict that is never indexed; here lineage is
+                         real and drives checkpoint-resume)
 
 Scale design (the 10^12-turn design point):
 - doc_id assignment is the classic two-pass zipWithIndex: range-partition by
@@ -39,9 +40,9 @@ Scale design (the 10^12-turn design point):
   scorer is correct at any run granularity, so compaction is a pure
   query-latency optimization.
 - segments (seg = crc32(conv_id) % n_segments) are the resume granularity:
-  a failed/partial build re-runs only segments whose manifest row is missing
-  or whose input fingerprint changed. Writes use dynamic partition overwrite
-  so a re-build replaces exactly its own partitions.
+  a failed/partial build re-runs only segments whose lineage entry is
+  missing or whose input fingerprint changed. Writes use dynamic partition
+  overwrite so a re-build replaces exactly its own partitions.
 """
 
 from __future__ import annotations
@@ -59,6 +60,7 @@ from pyspark.sql import functions as F
 
 from ..functions.codec import varbyte_encode_ex
 from ..functions.tokenizer import tokenize_col, tokenize_series
+from .commit import FORMAT_VERSION, commit_meta, lineage_entry, read_json, read_meta
 
 K1 = 1.2
 B = 0.75
@@ -493,10 +495,10 @@ def bucket_of(term: str, n_buckets: int) -> int:
 
 
 def read_if_written(spark: SparkSession, path: str) -> DataFrame | None:
-    """A small index metadata table (manifests, tombstones): None when it
-    was never written (the directory is absent or holds no ``.parquet``
-    file), else the read. Read errors propagate: an unreadable table must
-    fail the caller, not pass for an empty one."""
+    """A small index table (tombstones): None when it was never written
+    (the directory is absent or holds no ``.parquet`` file), else the read.
+    Read errors propagate: an unreadable table must fail the caller, not
+    pass for an empty one."""
     if not os.path.isdir(path) or not any(
         f.endswith(".parquet") for f in os.listdir(path)
     ):
@@ -504,27 +506,14 @@ def read_if_written(spark: SparkSession, path: str) -> DataFrame | None:
     return spark.read.parquet(path)
 
 
-def read_manifests(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    return read_if_written(spark, os.path.join(out_dir, "manifests"))
-
-
-def _read_meta(out_dir: str) -> dict | None:
-    import json
-    import os
-
-    path = os.path.join(out_dir, "meta.json")
-    if not os.path.exists(path):
-        return None
-    with open(path) as f:
-        return json.load(f)
-
-
 def _layout_mismatches(
     old_meta: dict, cfg: BuildConfig, doc_key_cols, fields
 ) -> list[str]:
-    """Config fields whose change invalidates existing segment bytes."""
+    """Config fields whose change invalidates existing segment bytes. An
+    index written under another on-disk format is a mismatch too."""
     checks = [
-        ("fields", old_meta.get("fields") or ["text"], list(fields)),
+        ("format_version", old_meta.get("format_version"), FORMAT_VERSION),
+        ("fields", old_meta.get("fields"), list(fields)),
         (
             "store_positions",
             bool(old_meta.get("store_positions")),
@@ -542,9 +531,9 @@ def _layout_mismatches(
 
 
 def _wipe_index_tables(out_dir: str) -> None:
-    import os
     import shutil
 
+    # corpus_stats and manifests: metadata tables of format_version < 1
     for sub in (
         "postings", "doc_stats", "term_seg_df", "term_dict",
         "corpus_stats", "manifests", "tombstones",
@@ -581,9 +570,14 @@ def build_index(
 
     Resume (the working analogue of the reference's skip-if-present logic at
     import_dart_data.py:543-550 and its never-written corp_import_history):
-    segments whose manifest row is ``committed`` with an unchanged input
-    fingerprint are skipped; everything else is (re)built and its partitions
-    atomically replaced via dynamic partition overwrite.
+    segments whose lineage entry in ``meta.json`` is ``committed`` with an
+    unchanged input fingerprint are skipped; everything else is (re)built
+    and its partitions atomically replaced via dynamic partition overwrite.
+    The build commits ``meta.json`` once, after its last data write, so a
+    killed build leaves the previous record (or none) and a re-run rebuilds
+    whatever that record does not vouch for. The record keeps the first
+    build's ``created_ts``; a ``force`` rebuild over the same layout carries
+    the earlier lineage entries (append states, compaction) forward.
     """
     cfg = config or BuildConfig()
     t0 = time.time()
@@ -598,7 +592,7 @@ def build_index(
     # a shrunk n_segments leaves orphan seg=... directories that dynamic
     # overwrite never touches. On mismatch: require force=True and wipe the
     # old tables so the rebuild starts from a clean layout.
-    old_meta = _read_meta(out_dir)
+    old_meta = read_json(os.path.join(out_dir, "meta.json"))
     if old_meta is not None:
         mismatches = _layout_mismatches(old_meta, cfg, doc_key_cols, fields)
         if mismatches:
@@ -609,6 +603,7 @@ def build_index(
                     "incompatible segment layouts — pass force=True to rebuild"
                 )
             _wipe_index_tables(out_dir)
+            old_meta = None
 
     base = transcripts.withColumn(
         "seg", _seg_col(F.col(doc_key_cols[0]), cfg.n_segments)
@@ -622,21 +617,14 @@ def build_index(
     )
     fingerprints = {r["seg"]: (r["input_fingerprint"], r["n_docs_in"]) for r in fp_df.collect()}
 
-    manifests = read_manifests(spark, out_dir)
     done: set[int] = set()
-    if manifests is not None and not force:
-        latest = (
-            manifests.filter(F.col("status") == "committed")
-            .groupBy("partition_id")
-            .agg(F.max_by("input_fingerprint", "created_ts").alias("fp"))
-            .collect()
-        )
-        for r in latest:
-            seg = r["partition_id"]
-            if seg in fingerprints and fingerprints[seg][0] == r["fp"]:
+    if old_meta is not None and not force:
+        for seg, (fp, _n) in fingerprints.items():
+            entry = old_meta["lineage"].get(f"seg-{seg:05d}")
+            if entry and entry["status"] == "committed" and entry["input_fingerprint"] == fp:
                 done.add(seg)
     todo = sorted(set(fingerprints) - done)
-    if not todo and _read_meta(out_dir) is not None:
+    if not todo and old_meta is not None:
         return {"built_segments": [], "skipped_segments": sorted(done), "elapsed_sec": time.time() - t0}
     # note: an EMPTY input with no existing index falls through — the build
     # then writes a valid empty index (meta + empty tables), the ES
@@ -648,7 +636,7 @@ def build_index(
         return _build_segments(
             spark, base, out_dir, cfg, doc_key_cols, field_sources, fields,
             meta_cols, transcripts, fingerprints, todo, done, persisted, t0,
-            force=force,
+            old_meta, force=force,
         )
     finally:
         for h in persisted:
@@ -723,10 +711,115 @@ def _resolve_fields(text_col, text_cols, shingle_fields):
     return fields, field_sources
 
 
+def _dl_cols(n_fields: int) -> list[str]:
+    """doc_stats length-norm column of each field id."""
+    return ["dl"] + [f"dl_f{i}" for i in range(1, n_fields)]
+
+
+def _doc_side(docs: DataFrame, field_sources, doc_key_cols, meta_cols, columns):
+    """Numbered docs -> (docs with per-field token counts, doc_stats column
+    list). Shared by the full build and the append path.
+
+    dl via expression, tokens NOT cached: materializing a 10^8-element
+    array<string> column into the columnar cache costs far more than
+    re-running the JVM regex at explode time (measured: caching tokens made
+    the doc_stats and flat phases memory-bound and killed scaling)."""
+    dls = _dl_cols(len(field_sources))
+    for name, (src, ngram) in zip(dls, field_sources):
+        docs = docs.withColumn(name, _field_dl_col(src, ngram))
+    stats_cols = list(dict.fromkeys(
+        ["doc_id", *doc_key_cols, *[c for c in meta_cols if c in columns],
+         *dls, "seg"]
+    ))
+    return docs, stats_cols
+
+
+def _write_docs_and_postings(
+    spark: SparkSession, stats_w: DataFrame, encoded: DataFrame, out_dir: str,
+    mode: str,
+) -> None:
+    """The doc_stats and postings writes of a build (``overwrite``) or an
+    append (``append``). Both derive from the SAME cached ranged input and
+    are independent of each other: submit them from a small thread pool so
+    the second job's tasks back-fill executors freed by the first job's tail
+    (guide §2.6 — actions are only sequential because driver code calls them
+    sequentially)."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    def _write_doc_stats():
+        # cluster by seg before the partitioned write: without it every
+        # write task emits a file into every seg dir (64 tasks × 8 segs
+        # = ~512 tiny files at sf0.1 — measured 4.7 s for ONE doc_stats
+        # agg scan afterwards, paid again by every filtered query).
+        # maxRecordsPerFile keeps per-seg files bounded at scale.
+        (
+            stats_w.repartition("seg")
+            .write.mode(mode)
+            .option("maxRecordsPerFile", 8_000_000)
+            .partitionBy("seg")
+            .parquet(f"{out_dir}/doc_stats")
+        )
+
+    def _write_postings():
+        (
+            # term-sorted files: parquet row-group min/max stats on
+            # `term` make the pushed In(term, ...) predicate skip whole
+            # row groups
+            encoded.repartition("seg", "field", "bucket")
+            .sortWithinPartitions("term")
+            .write.mode(mode)
+            .partitionBy("seg", "field", "bucket")
+            .parquet(f"{out_dir}/postings")
+        )
+
+    # pool threads do not inherit Spark local properties (job group,
+    # scheduler pool) or session tags: the wrapper carries the caller's
+    carry = inheritable_thread_target(spark)
+    with ThreadPoolExecutor(max_workers=2) as pool:
+        futures = [pool.submit(carry(_write_doc_stats)),
+                   pool.submit(carry(_write_postings))]
+        for f in futures:
+            f.result()
+
+
+def _corpus(n_docs: int, totals: list[int]) -> list[dict]:
+    """The commit record's per-field BM25 corpus counters."""
+    return [
+        {"field": i, "n_docs": int(n_docs), "total_tokens": int(tot),
+         "avgdl": tot / n_docs if n_docs else 0.0}
+        for i, tot in enumerate(totals)
+    ]
+
+
+def corpus_counters(doc_stats: DataFrame, n_fields: int) -> list[dict]:
+    """Per-field (n_docs, avgdl, total_tokens) of a doc_stats table — one
+    scan regardless of field count. NULL sums (empty index) count as 0."""
+    dls = _dl_cols(n_fields)
+    row = doc_stats.agg(
+        F.count("*").alias("n"), *[F.sum(c).alias(c) for c in dls]
+    ).collect()[0]
+    return _corpus(row["n"], [row[c] or 0 for c in dls])
+
+
+def _layout_record(cfg: BuildConfig, doc_key_cols, meta_cols, fields) -> dict:
+    return {
+        "n_segments": cfg.n_segments,
+        "n_buckets": cfg.n_buckets,
+        "target_run": cfg.target_run,
+        "block_size": BLOCK_SIZE,
+        "k1": K1,
+        "b": B,
+        "doc_key_cols": list(doc_key_cols),
+        "meta_cols": list(meta_cols),
+        "fields": list(fields),
+        "store_positions": bool(cfg.store_positions),
+    }
+
+
 def _build_segments(
     spark, base, out_dir, cfg, doc_key_cols, field_sources, fields,
     meta_cols, transcripts, fingerprints, todo, done, persisted, t0,
-    force=False,
+    old_meta, force=False,
 ):
     phases: dict[str, float] = {}
     tp = time.time()
@@ -739,41 +832,18 @@ def _build_segments(
         stats_out=assign_stats,
     )
     n_total_docs = assign_stats["n_total"]
-    # dl via expression, tokens NOT cached: materializing a 10^8-element
-    # array<string> column into the columnar cache costs far more than
-    # re-running the JVM regex at explode time (measured: caching tokens
-    # made the doc_stats and flat phases memory-bound and killed scaling).
-    # docs itself is NOT cached either — the ranged input is already cached
-    # inside assign_doc_ids and the numbering is deterministic given the
-    # broadcast offsets, so recomputing it for the explode pass is cheaper
-    # than building a second full-corpus columnar cache.
-    docs = docs.withColumn("dl", _field_dl_col(*field_sources[0]))
-    extra_dl_cols = []
-    for i, (src, ngram) in enumerate(field_sources[1:], start=1):
-        name = f"dl_f{i}"
-        docs = docs.withColumn(name, _field_dl_col(src, ngram))
-        extra_dl_cols.append(name)
+    # docs itself is NOT cached — the ranged input is already cached inside
+    # assign_doc_ids and the numbering is deterministic given the broadcast
+    # offsets, so recomputing it for the explode pass is cheaper than
+    # building a second full-corpus columnar cache.
+    docs, stats_cols = _doc_side(
+        docs, field_sources, doc_key_cols, meta_cols, transcripts.columns
+    )
     phases["assign_doc_ids"] = round(time.time() - tp, 3)
     tp = time.time()
 
     build_docs = docs.filter(F.col("seg").isin([int(s) for s in todo]))
 
-    # --- doc_stats (metadata + length norms), per rebuilt segment ---
-    stats_cols = list(
-        dict.fromkeys(
-            [
-                "doc_id",
-                *doc_key_cols,
-                *[c for c in meta_cols if c in transcripts.columns],
-                "dl",
-                *extra_dl_cols,
-                "seg",
-            ]
-        )
-    )
-    # no repartition("seg") here: partitionBy splits by seg at write time from
-    # whatever partitioning docs already has — an extra shuffle just to get
-    # one-file-per-seg costs more than the files it saves.
     # empty build (ZERO input docs, ES create-empty-index): a PARTITIONED
     # write of zero rows leaves no schema-bearing file behind, so write one
     # empty non-partitioned file instead (seg stays as a normal column).
@@ -805,12 +875,6 @@ def _build_segments(
         for table in ("doc_stats", "postings", "term_seg_df"):
             _clear_root_files(os.path.join(out_dir, table))
     stats_w = build_docs.select(*stats_cols)
-    if empty_build:
-        stats_w.repartition(1).write.mode("overwrite").parquet(
-            f"{out_dir}/doc_stats"
-        )
-        phases["doc_stats_write"] = round(time.time() - tp, 3)
-        tp = time.time()
 
     # --- local segment encode: NO token-level shuffle at all ---
     # This is the Lucene/ES ingest model made distributed: every doc-range
@@ -831,55 +895,19 @@ def _build_segments(
         store_positions=cfg.store_positions,
     )
     if empty_build:
+        stats_w.repartition(1).write.mode("overwrite").parquet(
+            f"{out_dir}/doc_stats"
+        )
+        phases["doc_stats_write"] = round(time.time() - tp, 3)
+        tp = time.time()
         encoded.repartition(1).write.mode("overwrite").parquet(
             f"{out_dir}/postings"
         )
         phases["encode_write"] = round(time.time() - tp, 3)
-        tp = time.time()
     else:
-        # doc_stats and postings both derive from the SAME cached ranged
-        # input and are independent of each other: submit them from a small
-        # thread pool so the second job's tasks back-fill executors freed by
-        # the first job's tail (guide §2.6 — actions are only sequential
-        # because driver code calls them sequentially).
-        from concurrent.futures import ThreadPoolExecutor
-
-        def _write_doc_stats():
-            # cluster by seg before the partitioned write: without it every
-            # write task emits a file into every seg dir (64 tasks × 8 segs
-            # = ~512 tiny files at sf0.1 — measured 4.7 s for ONE doc_stats
-            # agg scan afterwards, paid again by every filtered query).
-            # maxRecordsPerFile keeps per-seg files bounded at scale.
-            (
-                stats_w.repartition("seg")
-                .write.mode("overwrite")
-                .option("maxRecordsPerFile", 8_000_000)
-                .partitionBy("seg")
-                .parquet(f"{out_dir}/doc_stats")
-            )
-
-        def _write_postings():
-            (
-                # term-sorted files: parquet row-group min/max stats on
-                # `term` make the pushed In(term, ...) predicate skip whole
-                # row groups
-                encoded.repartition("seg", "field", "bucket")
-                .sortWithinPartitions("term")
-                .write.mode("overwrite")
-                .partitionBy("seg", "field", "bucket")
-                .parquet(f"{out_dir}/postings")
-            )
-
-        # pool threads do not inherit Spark local properties (job group,
-        # scheduler pool) or session tags: the wrapper carries the caller's
-        carry = inheritable_thread_target(spark)
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            f_stats = pool.submit(carry(_write_doc_stats))
-            f_post = pool.submit(carry(_write_postings))
-            f_stats.result()
-            f_post.result()
+        _write_docs_and_postings(spark, stats_w, encoded, out_dir, "overwrite")
         phases["doc_stats_and_encode_write"] = round(time.time() - tp, 3)
-        tp = time.time()
+    tp = time.time()
 
     # --- exact per-segment df, derived from the encoded postings (tiny:
     # one row per run) — feeds resume stats and the published term_dict ---
@@ -889,12 +917,13 @@ def _build_segments(
     seg_df = built_post.groupBy("seg", "field", "term").agg(F.sum("n").alias("df_p"))
     seg_df = seg_df.persist()
     persisted.append(seg_df)
+    n_fields = len(field_sources)
     if empty_build:
         seg_df.repartition(1).write.mode("overwrite").parquet(
             f"{out_dir}/term_seg_df"
         )
-        # --- publish global term_dict + corpus_stats from per-seg partials
-        publish_stats(spark, out_dir, cfg.n_buckets, n_fields=len(field_sources))
+        publish_term_dict(spark, out_dir, cfg.n_buckets)
+        corpus = corpus_counters(spark.read.parquet(f"{out_dir}/doc_stats"), n_fields)
     else:
         from concurrent.futures import ThreadPoolExecutor
 
@@ -919,14 +948,12 @@ def _build_segments(
 
         carry = inheritable_thread_target(spark)
         with ThreadPoolExecutor(max_workers=3) as pool:
-            fs = [
-                pool.submit(carry(_write_seg_df)),
-                # corpus_stats reads the already-written doc_stats
-                pool.submit(
-                    carry(write_corpus_stats),
-                    spark, out_dir, len(field_sources),
-                ),
-            ]
+            fs = [pool.submit(carry(_write_seg_df))]
+            # the corpus counters read the already-written doc_stats
+            f_corpus = pool.submit(
+                carry(corpus_counters),
+                spark.read.parquet(f"{out_dir}/doc_stats"), n_fields,
+            )
             if full_build:
                 # the persisted partials ARE the whole dictionary — publish
                 # straight from memory, concurrently with the partial write
@@ -938,41 +965,36 @@ def _build_segments(
                 )
             for f in fs:
                 f.result()
+            corpus = f_corpus.result()
             if not full_build:
                 # resume keeps skipped segments' partials on disk — the
                 # dictionary must union them, so publish AFTER the write
                 publish_term_dict(spark, out_dir, cfg.n_buckets)
-    _write_meta(out_dir, cfg, doc_key_cols, meta_cols, fields)
     phases["publish_stats"] = round(time.time() - tp, 3)
     tp = time.time()
 
-    # --- manifests: real lineage (vs the reference's dead code) ---
+    # --- commit: lineage of the rebuilt segments + corpus counters, one
+    # atomic meta.json replace after the last data write ---
     seg_metrics = {
         r["seg"]: (r["n_terms"], r["n_postings"])
         for r in seg_df.groupBy("seg")
         .agg(F.count("*").alias("n_terms"), F.sum("df_p").alias("n_postings"))
         .collect()
     }
-    now = pd.Timestamp.utcnow().tz_localize(None)
-    rows = []
+    lineage = dict(old_meta["lineage"]) if old_meta else {}
     for seg in todo:
         fp, ndocs = fingerprints[seg]
         nt, npost = seg_metrics.get(seg, (0, 0))
-        rows.append(
-            (f"seg-{seg:05d}", int(seg), int(fp), int(ndocs), int(nt), int(npost), now, "committed")
+        seg_id = f"seg-{seg:05d}"
+        lineage[seg_id] = lineage_entry(
+            seg_id, seg, "committed", fp, ndocs, nt, npost
         )
-    if rows:  # an empty build has no segments to commit
-        mpdf = pd.DataFrame(
-            rows,
-            columns=[
-                "seg_id", "partition_id", "input_fingerprint", "n_docs",
-                "n_terms", "n_postings", "created_ts", "status",
-            ],
-        )
-        spark.createDataFrame(mpdf).coalesce(1).write.mode("append").parquet(
-            f"{out_dir}/manifests"
-        )
-
+    commit_meta(out_dir, {
+        **_layout_record(cfg, doc_key_cols, meta_cols, fields),
+        "created_ts": old_meta["created_ts"] if old_meta else time.time(),
+        "corpus": corpus,
+        "lineage": lineage,
+    })
     phases["manifests"] = round(time.time() - tp, 3)
     elapsed = time.time() - t0
     return {
@@ -983,61 +1005,6 @@ def _build_segments(
         "elapsed_sec": elapsed,
         "turns_per_sec": n_total_docs / elapsed if elapsed > 0 else None,
     }
-
-
-def _write_meta(out_dir: str, cfg: BuildConfig, doc_key_cols, meta_cols, fields) -> None:
-    import json
-    import os
-
-    os.makedirs(out_dir, exist_ok=True)
-    with open(os.path.join(out_dir, "meta.json"), "w") as f:
-        json.dump(
-            {
-                "n_segments": cfg.n_segments,
-                "n_buckets": cfg.n_buckets,
-                "target_run": cfg.target_run,
-                "block_size": BLOCK_SIZE,
-                "k1": K1,
-                "b": B,
-                "doc_key_cols": list(doc_key_cols),
-                "meta_cols": list(meta_cols),
-                "fields": list(fields),
-                "store_positions": bool(cfg.store_positions),
-            },
-            f,
-        )
-
-
-def write_corpus_stats(spark: SparkSession, out_dir: str, n_fields: int) -> None:
-    """Publish per-field (n_docs, avgdl, total_tokens) — one doc_stats scan
-    regardless of field count (per-field dl columns aggregated together)."""
-    ds = spark.read.parquet(f"{out_dir}/doc_stats")
-    aggs = [F.count("*").alias("n_docs")]
-    for i in range(n_fields):
-        col = "dl" if i == 0 else f"dl_f{i}"
-        aggs.append(F.avg(col).alias(f"avgdl_{i}"))
-        aggs.append(F.sum(col).alias(f"tot_{i}"))
-    row = ds.agg(*aggs).collect()[0]
-    rows = [  # NULL aggregates (empty index) publish as zeros
-        (
-            i,
-            int(row["n_docs"]),
-            float(row[f"avgdl_{i}"] or 0.0),
-            int(row[f"tot_{i}"] or 0),
-        )
-        for i in range(n_fields)
-    ]
-    # pandas-backed local relation: the plain-list createDataFrame path
-    # parallelizes the rows into defaultParallelism pickled slices and a
-    # coalesce(1) write then pays one Python-worker hop per slice
-    # (measured ~4 s for a 1-row table at local[32]; the Arrow local
-    # relation is ~0.2 s)
-    pdf = pd.DataFrame(
-        rows, columns=["field", "n_docs", "avgdl", "total_tokens"]
-    )
-    spark.createDataFrame(
-        pdf, "field int, n_docs long, avgdl double, total_tokens long"
-    ).coalesce(1).write.mode("overwrite").parquet(f"{out_dir}/corpus_stats")
 
 
 def publish_term_dict(
@@ -1054,8 +1021,6 @@ def publish_term_dict(
     partials in memory (the fresh full-build path)."""
     if seg_df is None:
         seg_df = spark.read.parquet(f"{out_dir}/term_seg_df")
-    if "field" not in seg_df.columns:  # pre-fielded layout
-        seg_df = seg_df.withColumn("field", F.lit(0))
     (
         seg_df.groupBy("field", "term")
         .agg(F.sum("df_p").alias("df"))
@@ -1071,14 +1036,6 @@ def publish_term_dict(
         .partitionBy("bucket")
         .parquet(f"{out_dir}/term_dict")
     )
-
-
-def publish_stats(
-    spark: SparkSession, out_dir: str, n_buckets: int, n_fields: int = 1
-) -> None:
-    """Derive global term_dict + corpus_stats from per-segment tables."""
-    publish_term_dict(spark, out_dir, n_buckets)
-    write_corpus_stats(spark, out_dir, n_fields)
 
 
 def append_index(
@@ -1102,32 +1059,30 @@ def append_index(
     gets doc_ids [N, N+B). Violations raise ValueError — callers (e.g.
     ``streaming.incremental_refresh``) fall back to a full rebuild.
 
-    Incremental updates: corpus_stats from deltas (no corpus scan beyond
-    one column-pruned max-key probe), term_dict re-published from per-seg
-    df partials, per-segment manifest fingerprints XOR-combined (bit_xor is
-    associative, so old_fp XOR batch_fp = full-input fp — a later
-    ``build_index`` resume sees consistent fingerprints and skips).
+    Incremental updates: the commit record's corpus counters grow by the
+    batch's deltas (no corpus scan beyond one column-pruned max-key probe),
+    term_dict is re-published from per-seg df partials, and each touched
+    segment's lineage fingerprint is XOR-combined (bit_xor is associative,
+    so old_fp XOR batch_fp = full-input fp — a later ``build_index`` resume
+    sees consistent fingerprints and skips).
 
-    Crash safety: a ``pending`` manifest row lands before any data file and
-    the ``committed`` row after everything; a pending tag without its
-    committed row marks a torn append for the caller to repair with
-    ``build_index(force=True)``.
+    Crash safety: ``meta.json`` is committed with ``append-<batch_tag>``
+    ``pending`` before any data file and replaced by the full record, the
+    tag ``committed``, after everything; a pending tag marks a torn append
+    for the caller to repair with ``build_index(force=True)``.
     """
-    import json
-    import os
-
     t0 = time.time()
-    with open(os.path.join(index_dir, "meta.json")) as f:
-        meta = json.load(f)
+    meta = read_meta(index_dir)
+    if meta is None:
+        raise FileNotFoundError(f"append_index: no index committed at {index_dir!r}")
     fields, field_sources = _resolve_fields(text_col, text_cols, shingle_fields)
-    if meta.get("fields") and list(meta["fields"]) != fields:
+    if list(meta["fields"]) != fields:
         raise ValueError(
             f"append fields {fields} != index fields {meta['fields']}"
         )
     n_segments = int(meta["n_segments"])
     n_buckets = int(meta["n_buckets"])
     target_run = int(meta["target_run"])
-    n_fields = len(field_sources)
 
     key_struct = F.struct(*[F.col(c) for c in doc_key_cols])
     ds = spark.read.parquet(f"{index_dir}/doc_stats")
@@ -1152,18 +1107,10 @@ def append_index(
             "run build_index(force=True) instead"
         )
 
-    def _manifest_row(seg_id, pid, fp, ndocs, nterms, nposts, status):
-        row = pd.DataFrame(
-            [(seg_id, int(pid), int(fp), int(ndocs), int(nterms), int(nposts),
-              pd.Timestamp.utcnow().tz_localize(None), status)],
-            columns=["seg_id", "partition_id", "input_fingerprint", "n_docs",
-                     "n_terms", "n_postings", "created_ts", "status"],
-        )
-        spark.createDataFrame(row).coalesce(1).write.mode("append").parquet(
-            f"{index_dir}/manifests"
-        )
-
-    _manifest_row(f"append-{batch_tag}", -2, 0, n_batch, 0, 0, "pending")
+    tag = f"append-{batch_tag}"
+    lineage = dict(meta["lineage"])
+    lineage[tag] = lineage_entry(tag, -2, "pending", n_docs=n_batch)
+    commit_meta(index_dir, {**meta, "lineage": lineage})
 
     src_cols = list(dict.fromkeys(s for s, _ in field_sources))
     seg_batch = batch.withColumn("seg", _seg_col(F.col(doc_key_cols[0]), n_segments))
@@ -1172,33 +1119,17 @@ def append_index(
         docs = assign_doc_ids(
             seg_batch, key_cols=doc_key_cols, persisted=persisted, base=base_id
         )
-        docs = docs.withColumn("dl", _field_dl_col(*field_sources[0]))
-        extra_dl_cols = []
-        for i, (src, ngram) in enumerate(field_sources[1:], start=1):
-            name = f"dl_f{i}"
-            docs = docs.withColumn(name, _field_dl_col(src, ngram))
-            extra_dl_cols.append(name)
-        stats_cols = list(dict.fromkeys(
-            ["doc_id", *doc_key_cols,
-             *[c for c in meta_cols if c in batch.columns],
-             "dl", *extra_dl_cols, "seg"]
-        ))
-        docs.select(*stats_cols).write.mode("append").partitionBy("seg").parquet(
-            f"{index_dir}/doc_stats"
+        docs, stats_cols = _doc_side(
+            docs, field_sources, doc_key_cols, meta_cols, batch.columns
         )
-
         encoded = _encode_postings(
             docs, field_sources, target_run, n_buckets,
-            store_positions=bool(meta.get("store_positions")),
+            store_positions=bool(meta["store_positions"]),
         )
         encoded = encoded.persist()  # batch-sized; reused for seg_df partials
         persisted.append(encoded)
-        (
-            encoded.repartition("seg", "field", "bucket")
-            .sortWithinPartitions("term")
-            .write.mode("append")
-            .partitionBy("seg", "field", "bucket")
-            .parquet(f"{index_dir}/postings")
+        _write_docs_and_postings(
+            spark, docs.select(*stats_cols), encoded, index_dir, "append"
         )
         seg_df = encoded.groupBy("seg", "field", "term").agg(F.sum("n").alias("df_p"))
         seg_df.write.mode("append").partitionBy("seg").parquet(
@@ -1206,65 +1137,36 @@ def append_index(
         )
         publish_term_dict(spark, index_dir, n_buckets)
 
-        # corpus_stats from deltas — O(batch)
-        aggs = []
-        for i in range(n_fields):
-            col = "dl" if i == 0 else f"dl_f{i}"
-            aggs.append(F.sum(col).alias(f"tot_{i}"))
-        drow = docs.agg(*aggs).collect()[0]
-        old = {
-            int(r["field"]) if "field" in r.__fields__ else 0: r
-            for r in spark.read.parquet(f"{index_dir}/corpus_stats").collect()
-        }
-        n_total = base_n + n_batch
-        rows = []
-        for i in range(n_fields):
-            prev_tot = int(old[i]["total_tokens"]) if i in old else 0
-            tot = prev_tot + int(drow[f"tot_{i}"] or 0)
-            rows.append((i, n_total, tot / n_total, tot))
-        spark.createDataFrame(
-            pd.DataFrame(
-                rows, columns=["field", "n_docs", "avgdl", "total_tokens"]
-            ),
-            "field int, n_docs long, avgdl double, total_tokens long",
-        ).coalesce(1).write.mode("overwrite").parquet(f"{index_dir}/corpus_stats")
-
-        # per-seg fingerprints: combined = old XOR batch (order-independent)
-        fp_rows = seg_batch.groupBy("seg").agg(
+        # one pass over the batch: per-seg fingerprints (combined = old XOR
+        # batch, order-independent) and the corpus counters' token deltas
+        dls = _dl_cols(len(field_sources))
+        seg_rows = docs.groupBy("seg").agg(
             F.bit_xor(F.xxhash64(*doc_key_cols, *src_cols)).alias("fp"),
             F.count("*").alias("nd"),
+            *[F.sum(c).alias(c) for c in dls],
         ).collect()
-        manifests = read_manifests(spark, index_dir)
-        old_fp = {}
-        old_nd = {}
-        if manifests is not None:
-            for r in (
-                manifests.filter(F.col("status") == "committed")
-                .filter(F.col("partition_id") >= 0)
-                .groupBy("partition_id")
-                .agg(
-                    F.max_by("input_fingerprint", "created_ts").alias("fp"),
-                    F.max_by("n_docs", "created_ts").alias("nd"),
-                )
-                .collect()
-            ):
-                old_fp[int(r["partition_id"])] = int(r["fp"])
-                old_nd[int(r["partition_id"])] = int(r["nd"])
-        for r in fp_rows:
-            seg = int(r["seg"])
-            combined = old_fp.get(seg, 0) ^ int(r["fp"])
-            _manifest_row(
-                f"seg-{seg:05d}", seg, combined,
-                old_nd.get(seg, 0) + int(r["nd"]), 0, 0, "committed",
-            )
-        _manifest_row(f"append-{batch_tag}", -2, 0, n_batch, 0, 0, "committed")
     finally:
         for h in persisted:
             h.unpersist()
 
+    totals = [
+        old["total_tokens"] + sum(int(r[c] or 0) for r in seg_rows)
+        for old, c in zip(meta["corpus"], dls)
+    ]
+    for r in seg_rows:
+        seg_id = f"seg-{int(r['seg']):05d}"
+        old = lineage.get(seg_id) or lineage_entry(seg_id, r["seg"], "committed")
+        lineage[seg_id] = lineage_entry(
+            seg_id, r["seg"], "committed", old["input_fingerprint"] ^ int(r["fp"]),
+            old["n_docs"] + int(r["nd"]),
+        )
+    lineage[tag] = lineage_entry(tag, -2, "committed", n_docs=n_batch)
+    commit_meta(index_dir, {
+        **meta, "corpus": _corpus(base_n + n_batch, totals), "lineage": lineage,
+    })
     return {
         "appended_docs": n_batch,
         "n_docs": base_n + n_batch,
-        "segments_touched": sorted(int(r["seg"]) for r in fp_rows),
+        "segments_touched": sorted(int(r["seg"]) for r in seg_rows),
         "elapsed_sec": time.time() - t0,
     }

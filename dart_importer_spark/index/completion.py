@@ -40,6 +40,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from .commit import write_json
+
 _FORMAT_VERSION = 1
 
 
@@ -83,15 +85,11 @@ def build_completion(
         .parquet(os.path.join(out_dir, "entries"))
     )
     n = spark.read.parquet(os.path.join(out_dir, "entries")).count()
-    with open(os.path.join(out_dir, "meta.json"), "w") as f:
-        json.dump(
-            {
-                "format_version": _FORMAT_VERSION,
-                "context_cols": list(context_cols),
-                "n_entries": n,
-            },
-            f,
-        )
+    write_json(os.path.join(out_dir, "meta.json"), {
+        "format_version": _FORMAT_VERSION,
+        "context_cols": list(context_cols),
+        "n_entries": n,
+    })
     return {"n_entries": n}
 
 

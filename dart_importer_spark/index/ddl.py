@@ -47,13 +47,13 @@ analogue of ES refusing to mutate a live mapping in place).
 """
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .build import BuildConfig, build_index
+from .commit import read_json, write_json
 
 _NUMERIC = {
     "integer": "int",
@@ -177,10 +177,10 @@ def create_index(
         text_cols=tuple(text_cols),
         shingle_fields=tuple(shingles),
     )
-    with open(os.path.join(out_dir, "mapping.json"), "w") as fh:
-        json.dump(
-            {"mappings": mappings, "settings": settings or {}}, fh, indent=1
-        )
+    write_json(
+        os.path.join(out_dir, "mapping.json"),
+        {"mappings": mappings, "settings": settings or {}},
+    )
     return metrics
 
 
@@ -188,8 +188,8 @@ def create_index(
 # index templates (ES _index_template): mapping bodies auto-applied to new
 # indexes whose name matches a registered pattern — the reference creates a
 # fresh dart-* index per corp/data-type, which is exactly the workflow
-# templates exist for. One JSON registry file (atomic tmp+rename), like the
-# alias registry: template metadata is driver-side bookkeeping, never data.
+# templates exist for. One JSON registry file (``commit.write_json``), like
+# the alias registry: template metadata is driver-side bookkeeping, never data.
 # --------------------------------------------------------------------------
 
 
@@ -206,17 +206,11 @@ class TemplateRegistry:
         self.path = os.path.join(base_dir, "_index_templates.json")
 
     def _load(self) -> dict:
-        if not os.path.exists(self.path):
-            return {}
-        with open(self.path) as fh:
-            return json.load(fh)
+        return read_json(self.path) or {}
 
     def _save(self, data: dict) -> None:
         os.makedirs(self.base_dir, exist_ok=True)
-        tmp = self.path + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump(data, fh, indent=1, sort_keys=True)
-        os.replace(tmp, self.path)
+        write_json(self.path, data)
 
     def put(
         self,

@@ -28,7 +28,6 @@ Scale design:
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import time
@@ -40,13 +39,8 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.codec import decode_runs
-from .build import (
-    POSTINGS_SCHEMA,
-    pack_runs_bulk,
-    read_if_written,
-    read_manifests,
-    write_corpus_stats,
-)
+from .build import POSTINGS_SCHEMA, corpus_counters, pack_runs_bulk, read_if_written
+from .commit import commit_meta, lineage_entry, read_meta
 
 MERGED_SEG = -1  # seg id marking post-compaction runs
 
@@ -197,24 +191,24 @@ def compact_index(
     tomb_broadcast_limit: int = 2_000_000,
 ) -> dict:
     """Compact ``index_dir`` into ``out_dir``: merge runs per term, drop
-    tombstoned docs, republish term_dict / corpus_stats / manifests."""
+    tombstoned docs, republish term_dict, then commit ``out_dir``'s
+    ``meta.json`` (corpus counters + the source lineage with a compaction
+    entry) once, after the last data write. ``index_dir`` is never
+    modified, so an interrupted compaction leaves it serving as before."""
     t0 = time.time()
     if os.path.realpath(out_dir) == os.path.realpath(index_dir):
         # the merged/doc_stats plans lazily re-read index_dir while writing;
         # in-place compaction would read its own partial output (or destroy
         # the only copy on failure)
         raise ValueError("compact_index: out_dir must differ from index_dir")
-    with open(os.path.join(index_dir, "meta.json")) as f:
-        meta = json.load(f)
+    meta = read_meta(index_dir)
+    if meta is None:
+        raise FileNotFoundError(f"compact_index: no index committed at {index_dir!r}")
     if target_run is None:
         target_run = int(meta["target_run"])
     n_buckets = int(meta["n_buckets"])
 
     post = spark.read.parquet(f"{index_dir}/postings")
-    if "field" not in post.columns:  # pre-fielded layout
-        post = post.withColumn("field", F.lit(0))
-    if "poss" not in post.columns:  # pre-positions layout
-        post = post.withColumn("poss", F.lit(b""))
     doc_stats = spark.read.parquet(f"{index_dir}/doc_stats")
     tomb = read_if_written(spark, os.path.join(index_dir, "tombstones"))
     tomb_df = None
@@ -357,6 +351,10 @@ def compact_index(
     )
 
     os.makedirs(out_dir, exist_ok=True)
+    # a record left by an earlier compaction into out_dir would describe
+    # tables this run is about to overwrite
+    if os.path.exists(os.path.join(out_dir, "meta.json")):
+        os.remove(os.path.join(out_dir, "meta.json"))
     (
         merged.repartition("bucket")
         .sortWithinPartitions("term")
@@ -390,43 +388,20 @@ def compact_index(
         .partitionBy("bucket")
         .parquet(f"{out_dir}/term_dict")
     )
-    n_fields = len(meta.get("fields") or [None])
-    write_corpus_stats(spark, out_dir, n_fields)
-    ds_out = spark.read.parquet(f"{out_dir}/doc_stats")
-
-    with open(os.path.join(out_dir, "meta.json"), "w") as f:
-        json.dump({**meta, "compacted": True, "target_run": target_run}, f)
-
-    # lineage: compaction manifest row (same table as build manifests)
-    prev = read_manifests(spark, index_dir)
-    n_docs = int(ds_out.count())
-    n_runs = int(post_out.count())
-    row = pd.DataFrame(
-        [
-            (
-                "compact-00000",
-                -1,
-                0,
-                n_docs,
-                0,
-                n_runs,
-                pd.Timestamp.utcnow().tz_localize(None),
-                "committed",
-            )
-        ],
-        columns=[
-            "seg_id", "partition_id", "input_fingerprint", "n_docs",
-            "n_terms", "n_postings", "created_ts", "status",
-        ],
+    corpus = corpus_counters(
+        spark.read.parquet(f"{out_dir}/doc_stats"), len(meta["fields"])
     )
-    mdf = spark.createDataFrame(row)
-    if prev is not None:
-        mdf = prev.unionByName(mdf)
-    mdf.coalesce(1).write.mode("overwrite").parquet(f"{out_dir}/manifests")
-
+    n_docs = corpus[0]["n_docs"]
+    n_runs = int(post_out.count())
     # tombstones are applied, none carry over
     shutil.rmtree(os.path.join(out_dir, "tombstones"), ignore_errors=True)
 
+    commit_meta(out_dir, {
+        **meta, "compacted": True, "target_run": target_run, "corpus": corpus,
+        "lineage": {**meta["lineage"], "compact-00000": lineage_entry(
+            "compact-00000", -1, "committed", n_docs=n_docs, n_postings=n_runs,
+        )},
+    })
     return {
         "n_docs": n_docs,
         "n_runs": n_runs,

@@ -5,23 +5,24 @@ copies into the repository only the segment files the repo doesn't
 already hold, because Lucene segments are immutable (a fact ES's docs
 lean on explicitly). This engine's layout has the same property: builds
 and appends write new parquet files, deletes append tombstone files,
-compaction writes a NEW directory — nothing is rewritten in place. So a
-snapshot here is a manifest of the index's files plus a content-reused
-blob store, and both snapshot and restore are O(#files) DRIVER-SIDE
-metadata operations (hard-links on the same filesystem, byte copies
-across devices) — never a data scan, exactly the ES shard-store model
-(the ``index_stats`` treatment).
+compaction writes a NEW directory — no data file is rewritten in place.
+So a snapshot here is a manifest of the index's files plus a
+content-reused blob store, and both snapshot and restore are O(#files)
+DRIVER-SIDE metadata operations (hard-links on the same filesystem, byte
+copies across devices) — never a data scan, exactly the ES shard-store
+model (the ``index_stats`` treatment).
 
 File identity is ``(relative path, size, mtime_ns)``: sound under the
-immutability invariant above (the one in-place mutation, the aliases
-registry, lives OUTSIDE index directories), and free — a content hash
-of a 100-TB index would be a full read. Snapshot JSON commits via the
-manifests' tmp+rename discipline, so a torn snapshot is invisible, not
+immutability invariant above, and free — a content hash of a 100-TB
+index would be a full read. The index's one mutable file, the
+``meta.json`` commit record, is replaced whole by ``commit.write_json``
+(tmp + ``os.replace``), so each commit is a new file identity. Snapshot
+JSON is written the same way, so a torn snapshot is invisible, not
 corrupt. Single-writer assumption as everywhere in this engine: don't
-snapshot mid-build (the commit point is the manifests write; a snapshot
-between operations is point-in-time consistent because tombstones are
-append-only files pinned by the listing — the same reading the PIT API
-uses).
+snapshot mid-build (the commit point is the ``meta.json`` replace; a
+snapshot between operations is point-in-time consistent because
+tombstones are append-only files pinned by the listing — the same
+reading the PIT API uses).
 
 Reference parity: the reference delegates durability to the ES cluster
 (Running-ELK.md's docker volumes); this is the explicit API for it.
@@ -34,6 +35,8 @@ import json
 import os
 import shutil
 import time
+
+from .commit import write_json
 
 
 class SnapshotError(ValueError):
@@ -103,10 +106,7 @@ class SnapshotRepo:
             ),
             "files": files,
         }
-        tmp = sp + f".tmp.{os.getpid()}"
-        with open(tmp, "w") as fh:
-            json.dump(doc, fh, indent=1)
-        os.replace(tmp, sp)
+        write_json(sp, doc)
         return {
             "snapshot": name,
             "total": len(files),

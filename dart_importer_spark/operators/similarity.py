@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 from ..functions.localrel import lit_double_array
 from ..functions.partitioning import widen_for_python
+from ..index.commit import write_json
 
 
 def _cosine(a: Column, b: Column) -> Column:
@@ -544,7 +545,6 @@ class LshAnnIndex:
         is the build-once/query-many path. At 100 TB, store per-table
         (sig -> id) projections partitioned by sig and join candidates back
         to the vectors; here vectors ride along (one table, simpler I/O)."""
-        import json
         import os
 
         (
@@ -553,18 +553,14 @@ class LshAnnIndex:
             .write.mode("overwrite")
             .parquet(f"{path}/sigs")
         )
-        with open(os.path.join(path, "meta.json"), "w") as f:
-            json.dump(
-                {
-                    "id_col": self.id_col,
-                    "vec_col": self.vec_col,
-                    "n_tables": self.n_tables,
-                    "n_planes": self.n_planes,
-                    "seed": self.seed,
-                    "dim": self.dim,
-                },
-                f,
-            )
+        write_json(os.path.join(path, "meta.json"), {
+            "id_col": self.id_col,
+            "vec_col": self.vec_col,
+            "n_tables": self.n_tables,
+            "n_planes": self.n_planes,
+            "seed": self.seed,
+            "dim": self.dim,
+        })
 
     @classmethod
     def load(cls, spark, path: str) -> "LshAnnIndex":
@@ -838,7 +834,6 @@ class IvfAnnIndex:
         table (``quant``). :meth:`topk_sq` then scans only the byte codes
         for the approximate pass and touches float vectors for just the
         rescore window — the ES ``int8_hnsw`` / FAISS SQ8 memory shape."""
-        import json
         import os
 
         spark = self.table.sparkSession
@@ -947,16 +942,12 @@ class IvfAnnIndex:
             ),
             "list_id int, centroid array<double>",
         ).coalesce(1).write.mode("overwrite").parquet(f"{path}/centroids")
-        with open(os.path.join(path, "meta.json"), "w") as f:
-            json.dump(
-                {
-                    "id_col": self.id_col,
-                    "vec_col": self.vec_col,
-                    "n_lists": self.n_lists,
-                    "seed": self.seed,
-                },
-                f,
-            )
+        write_json(os.path.join(path, "meta.json"), {
+            "id_col": self.id_col,
+            "vec_col": self.vec_col,
+            "n_lists": self.n_lists,
+            "seed": self.seed,
+        })
 
     def append(self, new_emb: DataFrame, path: str) -> dict:
         """IVF add: assign NEW vectors to their nearest EXISTING centroid

@@ -33,7 +33,6 @@ are rank-identical to exhaustive scoring (property-tested).
 
 from __future__ import annotations
 
-import json
 import math
 import os
 import re
@@ -49,6 +48,7 @@ from ..functions.codec import decode_runs
 from ..functions.localrel import lit_double_array, local_df
 from ..functions.tokenizer import tokenize_text
 from ..index.build import B, BLOCK_SIZE, K1, bucket_of, read_if_written
+from ..index.commit import read_json, read_meta
 
 SCORED_SCHEMA = "doc_id long, score double, matched int"
 
@@ -253,16 +253,15 @@ class InvertedIndex:
         # re-reading parquet footers on every query against this handle
         # (plan-level only — every action still scans parquet)
         self._df_cache: dict[str, DataFrame] = {}
-        with open(os.path.join(index_dir, "meta.json")) as f:
-            self.meta = json.load(f)
+        # the commit record holds every statistic an open needs: no job runs
+        self.meta = read_meta(index_dir)
+        if self.meta is None:
+            raise FileNotFoundError(f"no index committed at {index_dir!r}")
         self.n_buckets = int(self.meta["n_buckets"])
-        self.fields: list[str] = list(self.meta.get("fields") or ["text"])
-        rows = spark.read.parquet(f"{index_dir}/corpus_stats").collect()
-        if "field" in rows[0].__fields__:
-            self.avgdl_by_field = {int(r["field"]): float(r["avgdl"]) for r in rows}
-        else:  # pre-fielded layout: one row, field 0
-            self.avgdl_by_field = {0: float(rows[0]["avgdl"])}
-        self.n_docs = int(rows[0]["n_docs"])
+        self.fields: list[str] = list(self.meta["fields"])
+        corpus = self.meta["corpus"]
+        self.avgdl_by_field = {int(c["field"]): float(c["avgdl"]) for c in corpus}
+        self.n_docs = int(corpus[0]["n_docs"])
         self.avgdl = self.avgdl_by_field[0]
         # ES _profile parity: topk() records which physical plan ran (mask
         # pushdown vs distributed fallback, θ) here after every call
@@ -428,12 +427,7 @@ class InvertedIndex:
         return self._read_table("term_dict")
 
     def postings(self) -> DataFrame:
-        post = self._read_table("postings")
-        if "field" not in post.columns:  # pre-fielded layout
-            post = post.withColumn("field", F.lit(0))
-        if "poss" not in post.columns:  # pre-positions layout
-            post = post.withColumn("poss", F.lit(b""))
-        return post
+        return self._read_table("postings")
 
     def _candidate_postings(self, terms: Sequence[str], fid: int = 0) -> DataFrame:
         buckets = sorted({bucket_of(t, self.n_buckets) for t in terms})
@@ -445,12 +439,11 @@ class InvertedIndex:
 
     def term_stats(self, terms: Sequence[str], field=None) -> dict[str, int]:
         buckets = sorted({bucket_of(t, self.n_buckets) for t in terms})
-        td = self.term_dict()
-        if "bucket" in td.columns:  # bucket-partitioned dictionary: prune dirs
-            td = td.filter(F.col("bucket").isin(buckets))
-        if "field" in td.columns:
-            td = td.filter(F.col("field") == self._fid(field))
-        rows = td.filter(F.col("term").isin(list(terms))).collect()
+        rows = (
+            self._field_dict(field)
+            .filter(F.col("bucket").isin(buckets) & F.col("term").isin(list(terms)))
+            .collect()
+        )
         return {r["term"]: int(r["df"]) for r in rows}
 
     # ------------------------------------------------------- match / BM25 topk
@@ -934,10 +927,7 @@ class InvertedIndex:
         return ds
 
     def _field_dict(self, field: str | int | None) -> DataFrame:
-        td = self.term_dict()
-        if "field" in td.columns:
-            td = td.filter(F.col("field") == self._fid(field))
-        return td
+        return self.term_dict().filter(F.col("field") == self._fid(field))
 
     def get_by_keys(self, keys: Sequence[tuple]) -> DataFrame:
         """Multi-get by document keys — ES _mget (the batch form of the
@@ -1000,8 +990,7 @@ class InvertedIndex:
         """ES-style rewrite budget: keep the first ``max_expansions`` matching
         dictionary terms in lexicographic term order (deterministic, so the
         capped query is well-defined and oracle-checkable)."""
-        cols = ["term"] + (["bucket"] if "bucket" in td.columns else [])
-        td = td.select(*cols)
+        td = td.select("term", "bucket")
         if max_expansions is not None:
             td = td.orderBy("term").limit(int(max_expansions))
         return td
@@ -1142,12 +1131,9 @@ class InvertedIndex:
         if max_dist <= 0:  # exact-match band: no expansion beyond the term
             td = self._field_dict(field).filter(F.col("term") == q)
             return self._cap_expansion(td, max_expansions)
-        td = self._field_dict(field)
-        if "tlen" in td.columns:
-            band = F.col("tlen").between(len(q) - max_dist, len(q) + max_dist)
-        else:  # pre-tlen index layout: still prune before levenshtein
-            band = F.length("term").between(len(q) - max_dist, len(q) + max_dist)
-        td = td.filter(band)
+        td = self._field_dict(field).filter(
+            F.col("tlen").between(len(q) - max_dist, len(q) + max_dist)
+        )
         pl = max(0, int(prefix_length))
         cand, qq = F.col("term"), q
         if pl:
@@ -1216,7 +1202,7 @@ class InvertedIndex:
         k rows per token reach the driver."""
         toks = list(dict.fromkeys(self._analyze(text, field) or [text.lower()]))
         td = self._field_dict(field)
-        tlen = F.col("tlen") if "tlen" in td.columns else F.length("term")
+        tlen = F.col("tlen")
         band = None
         for q in toks:
             b = tlen.between(len(q) - max_dist, len(q) + max_dist)
@@ -1435,10 +1421,7 @@ class InvertedIndex:
         postings directories, the distributed analogue of the driver-side
         bucket In-list."""
         post = self.postings().filter(F.col("field") == fid)
-        keys = (
-            ["bucket", "term"] if "bucket" in terms_df.columns else ["term"]
-        )
-        return post.join(F.broadcast(terms_df), keys, "left_semi")
+        return post.join(F.broadcast(terms_df), ["bucket", "term"], "left_semi")
 
     _POSTING_COLS = {
         "term": ("term", "term string"),
@@ -8482,13 +8465,9 @@ class InvertedIndex:
         synthesized from the index layout for indexes built directly
         with build_index (subfields reported as the multi-field entries
         ES shows for search_as_you_type)."""
-        import json as _json
-        import os as _os
-
-        p = _os.path.join(self.dir, "mapping.json")
-        if _os.path.exists(p):
-            with open(p) as fh:
-                return _json.load(fh)
+        stored = read_json(os.path.join(self.dir, "mapping.json"))
+        if stored is not None:
+            return stored
         props: dict = {}
         for f in self.meta.get("fields", []):
             if "._" in f:  # shingle subfield rides its source field

@@ -13,7 +13,7 @@ Scale notes:
 - rows are yielded in Arrow batches; no per-row Python beyond the parser
   itself (the unavoidable cost of an XML wire format).
 - the reference's skip-if-downloaded resume (S2) is subsumed by the index
-  manifests: re-ingesting an unchanged archive re-derives the same rows and
+  lineage: re-ingesting an unchanged archive re-derives the same rows and
   the fingerprint-gated build skips every segment.
 """
 

@@ -6,7 +6,7 @@ skip-if-present resume loop (:543-550). This module is the Spark-native
 generalization: a file-source stream over a landing directory of transcript
 parquet files, consumed exactly-once (checkpointed offsets), with each
 micro-batch appended to the index's corpus table and only the segments whose
-input fingerprint changed rebuilt (the manifest anti-join of
+input fingerprint changed rebuilt (the lineage check of
 ``index.build.build_index``).
 
 Append contract (documented, asserted in tests): new conv_ids must sort
@@ -31,9 +31,8 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from pyspark.sql import functions as F
-
-from ..index.build import BuildConfig, append_index, build_index, read_manifests
+from ..index.build import BuildConfig, append_index, build_index
+from ..index.commit import commit_meta, lineage_entry, read_meta
 
 
 def corpus_dir(index_dir: str) -> str:
@@ -44,67 +43,43 @@ def read_corpus(spark: SparkSession, index_dir: str) -> DataFrame:
     return spark.read.parquet(corpus_dir(index_dir))
 
 
-def _commit_dangling_appends(
-    spark: SparkSession, index_dir: str, current_tag: str | None = None
-) -> list[str]:
-    """After a successful torn-repair rebuild, append ``committed`` manifest
-    rows for every append tag that only has a ``pending`` row. Without this
-    the torn state is permanent — ``_append_state`` would see the dangling
-    pending row forever and force a full O(corpus) rebuild on every
-    subsequent batch, silently defeating the O(batch) append design. The
-    rebuild ran over the corpus table (which the batch was staged to before
-    its append attempt), so the torn batches' data IS in the rebuilt index
-    and marking them committed is truthful."""
-    import pandas as pd
-
-    manifests = read_manifests(spark, index_dir)
-    if manifests is None:
-        return []
-    rows = (
-        manifests.filter(F.col("seg_id").startswith("append-"))
-        .select("seg_id", "status")
-        .collect()
+def _commit_dangling_appends(index_dir: str, current_tag: str | None = None) -> list[str]:
+    """After a successful torn-repair rebuild, mark every ``pending`` append
+    tag of the commit record ``committed``. Without this the torn state is
+    permanent — ``_append_state`` would see the dangling pending tag forever
+    and force a full O(corpus) rebuild on every subsequent batch, silently
+    defeating the O(batch) append design. The rebuild ran over the corpus
+    table (which the batch was staged to before its append attempt), so the
+    torn batches' data IS in the rebuilt index and marking them committed
+    is truthful."""
+    meta = read_meta(index_dir)
+    lineage = dict(meta["lineage"])
+    dangling = sorted(
+        s for s, e in lineage.items()
+        if s.startswith("append-") and e["status"] != "committed"
     )
-    states: dict[str, set] = {}
-    for r in rows:
-        states.setdefault(r["seg_id"], set()).add(r["status"])
-    dangling = sorted(s for s, st in states.items() if "committed" not in st)
-    if current_tag is not None and f"append-{current_tag}" not in states:
+    if current_tag is not None and f"append-{current_tag}" not in lineage:
         # the batch that TRIGGERED the repair was folded into the rebuild
         # (it was staged to corpus first); commit its tag so a checkpoint
         # replay of this batch skips instead of rebuilding again
         dangling.append(f"append-{current_tag}")
     if dangling:
-        now = pd.Timestamp.utcnow().tz_localize(None)
-        repair = pd.DataFrame(
-            [(tag, -2, 0, 0, 0, 0, now, "committed") for tag in dangling],
-            columns=["seg_id", "partition_id", "input_fingerprint", "n_docs",
-                     "n_terms", "n_postings", "created_ts", "status"],
-        )
-        spark.createDataFrame(repair).coalesce(1).write.mode("append").parquet(
-            f"{index_dir}/manifests"
-        )
+        for tag in dangling:
+            lineage[tag] = lineage_entry(tag, -2, "committed")
+        commit_meta(index_dir, {**meta, "lineage": lineage})
     return dangling
 
 
-def _append_state(spark, index_dir: str, tag: str) -> str:
+def _append_state(meta: dict, tag: str) -> str:
     """'applied' if this batch tag already committed (checkpoint replay),
-    'torn' if ANY append left a pending row without its committed row
-    (crash mid-append -> data files may be partially written), else 'clean'."""
-    manifests = read_manifests(spark, index_dir)
-    if manifests is None:
-        return "clean"
-    rows = (
-        manifests.filter(F.col("seg_id").startswith("append-"))
-        .select("seg_id", "status")
-        .collect()
-    )
-    states: dict[str, set] = {}
-    for r in rows:
-        states.setdefault(r["seg_id"], set()).add(r["status"])
-    if "committed" in states.get(f"append-{tag}", set()):
+    'torn' if ANY append tag is still pending (crash mid-append -> data
+    files may be partially written), else 'clean'."""
+    appends = {
+        s: e["status"] for s, e in meta["lineage"].items() if s.startswith("append-")
+    }
+    if appends.get(f"append-{tag}") == "committed":
         return "applied"
-    if any("committed" not in st for st in states.values()):
+    if any(st != "committed" for st in appends.values()):
         return "torn"
     return "clean"
 
@@ -136,8 +111,9 @@ def incremental_refresh(
         staged = os.path.join(corpus_dir(index_dir), f"batch={batch_id}")
         batch_df.write.mode("overwrite").parquet(staged)
         tag = f"b{batch_id:08d}"
-        first = not os.path.exists(os.path.join(index_dir, "meta.json"))
-        state = "clean" if first else _append_state(spark, index_dir, tag)
+        meta = read_meta(index_dir)
+        first = meta is None
+        state = "clean" if first else _append_state(meta, tag)
         append_kwargs = {
             k: v for k, v in build_kwargs.items() if k != "force"
         }
@@ -154,7 +130,7 @@ def incremental_refresh(
             m["mode"] = "initial_build"
         elif state == "torn":
             # a previous append died between its pending and committed
-            # manifest rows — data files may be half-written; repair with a
+            # commits — data files may be half-written; repair with a
             # full rebuild from the corpus table (dynamic partition
             # overwrite replaces every partition)
             m = build_index(
@@ -162,10 +138,10 @@ def incremental_refresh(
                 force=True, **append_kwargs,
             )
             m["mode"] = "torn_repair_rebuild"
-            # close out the dangling pending rows so the NEXT batch appends
+            # close out the dangling pending tags so the NEXT batch appends
             # in O(batch) again instead of rebuilding forever
             m["repaired_append_tags"] = _commit_dangling_appends(
-                spark, index_dir, current_tag=tag
+                index_dir, current_tag=tag
             )
         else:
             try:

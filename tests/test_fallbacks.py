@@ -95,9 +95,10 @@ def test_build_on_top_of_empty_index(spark, tmp_path):
 
 
 def test_all_skipped_resume_with_missing_meta_preserves_data(spark, tmp_path):
-    """todo == [] with meta.json missing must repair meta WITHOUT
-    overwriting healthy tables (the empty-build flag is keyed on the
-    input, not on todo)."""
+    """A missing meta.json means 'no commit': every segment rebuilds over
+    the surviving tables (dynamic partition overwrite), and the healthy
+    data is not lost to the empty-build full overwrite (that flag is keyed
+    on the input being empty, not on the lineage)."""
     import os
 
     from dart_importer_spark.index.build import BuildConfig, build_index

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from dart_importer_spark.datagen import TRANSCRIPTS_SCHEMA, generate_transcripts
 from dart_importer_spark.index.build import BuildConfig, append_index, build_index
+from dart_importer_spark.index.commit import commit_meta, lineage_entry, read_meta
 from dart_importer_spark.index.merge import compact_index
 from dart_importer_spark.query.engine import InvertedIndex
 from dart_importer_spark.streaming.refresh import incremental_refresh
@@ -91,8 +92,6 @@ def test_forced_layout_change_wipes_stale_partitions(spark, tmp_path):
 def test_torn_append_repair_is_permanent(spark, tmp_path):
     """ADVICE r02: one torn append must cost ONE repair rebuild, after which
     the stream returns to O(batch) appends — not rebuild-forever."""
-    import pandas as pd
-
     landing = str(tmp_path / "landing")
     idx = str(tmp_path / "idx")
     all_tr = generate_transcripts(spark, 60).persist()
@@ -106,16 +105,12 @@ def test_torn_append_repair_is_permanent(spark, tmp_path):
     m1 = incremental_refresh(spark, landing, idx, TRANSCRIPTS_SCHEMA, CFG)
     assert [m["mode"] for m in m1] == ["initial_build"]
 
-    # simulate a crash mid-append: a pending manifest row with no committed row
-    torn = pd.DataFrame(
-        [("append-torn0001", -2, 0, 5, 0, 0,
-          pd.Timestamp.utcnow().tz_localize(None), "pending")],
-        columns=["seg_id", "partition_id", "input_fingerprint", "n_docs",
-                 "n_terms", "n_postings", "created_ts", "status"],
+    # simulate a crash mid-append: a pending tag that never got committed
+    meta = read_meta(idx)
+    meta["lineage"]["append-torn0001"] = lineage_entry(
+        "append-torn0001", -2, "pending", n_docs=5
     )
-    spark.createDataFrame(torn).coalesce(1).write.mode("append").parquet(
-        f"{idx}/manifests"
-    )
+    commit_meta(idx, meta)
 
     b2.coalesce(1).write.mode("append").parquet(landing)
     m2 = incremental_refresh(spark, landing, idx, TRANSCRIPTS_SCHEMA, CFG)

@@ -1,13 +1,14 @@
-"""Checkpoint-resume via per-partition lineage manifests + the input_hint
-per-turn text-equality invariant.
+"""Checkpoint-resume via the per-segment lineage of the ``meta.json``
+commit record + the input_hint per-turn text-equality invariant.
 
 The reference's resume logic skips (corp, year) units already present
 (import_dart_data.py:543-550) but its lineage index is dead code (:606-625
-builds a history dict never indexed). Here manifests are real: these tests
-assert (a) a re-run rebuilds nothing, (b) deleting one manifest row rebuilds
-exactly that segment, (c) key-monotone appends rebuild only the segments
-that received new docs, and (d) doc_id assignment is the stable
-(conv_id, turn_idx) rank so per-turn text equality holds end-to-end.
+builds a history dict never indexed). Here lineage is real: these tests
+assert (a) a re-run rebuilds nothing, (b) deleting one segment's lineage
+entry rebuilds exactly that segment, (c) key-monotone appends rebuild only
+the segments that received new docs, (d) doc_id assignment is the stable
+(conv_id, turn_idx) rank so per-turn text equality holds end-to-end, and
+(e) a build killed before its commit resumes to the uninterrupted result.
 """
 
 from __future__ import annotations
@@ -18,6 +19,7 @@ from pyspark.sql import functions as F
 
 from dart_importer_spark.datagen import generate_transcripts
 from dart_importer_spark.index.build import BuildConfig, build_index
+from dart_importer_spark.index.commit import commit_meta, read_meta
 from dart_importer_spark.query.engine import InvertedIndex
 
 CFG = BuildConfig(n_segments=4, n_buckets=8)
@@ -40,11 +42,9 @@ def test_rerun_skips_everything(spark, resume_dir):
 
 
 def test_missing_manifest_rebuilds_exactly_that_segment(spark, resume_dir, tmp_path):
-    manifests = spark.read.parquet(f"{resume_dir}/manifests").toPandas()
-    damaged = manifests[manifests["partition_id"] != 2]
-    spark.createDataFrame(damaged).coalesce(1).write.mode("overwrite").parquet(
-        f"{resume_dir}/manifests"
-    )
+    meta = read_meta(resume_dir)
+    del meta["lineage"]["seg-00002"]
+    commit_meta(resume_dir, meta)
     tr = generate_transcripts(spark, 150)
     m = build_index(spark, tr, resume_dir, CFG)
     assert m["built_segments"] == [2]
@@ -115,26 +115,19 @@ def test_per_turn_text_equality_invariant(spark, transcripts_df, built_index):
 
 
 def test_corrupt_manifests_make_resume_raise(spark, resume_dir, tmp_path):
-    """A never-written manifests table means 'no lineage' without a Spark
-    read; an unreadable one fails the resume instead of silently
-    rebuilding every segment."""
+    """A never-written commit record reads as None ('no lineage'); an
+    unreadable one fails the resume instead of silently rebuilding every
+    segment."""
+    import json
     import os
     import shutil
 
-    from dart_importer_spark.index.build import read_manifests
-
-    assert read_manifests(spark, str(tmp_path)) is None
+    assert read_meta(str(tmp_path)) is None
     out = str(tmp_path / "idx")
     shutil.copytree(resume_dir, out)
-    mdir = os.path.join(out, "manifests")
-    for name in os.listdir(mdir):
-        path = os.path.join(mdir, name)
-        if name.endswith(".crc"):
-            os.remove(path)
-        elif name.endswith(".parquet"):
-            with open(path, "wb") as f:
-                f.write(b"not a parquet file")
-    with pytest.raises(Exception):
+    with open(os.path.join(out, "meta.json"), "w") as f:
+        f.write('{"format_version": 1, "lineage": {')
+    with pytest.raises(json.JSONDecodeError):
         build_index(spark, generate_transcripts(spark, 150), out, CFG)
 
 
