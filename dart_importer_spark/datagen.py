@@ -1,4 +1,4 @@
-"""Deterministic synthetic fixtures (FIXTURES.md T1/T2).
+"""Deterministic synthetic fixtures (FIXTURES.md T1).
 
 Pure-function-of-seed generation so golden top-k results are stable —
 mirroring the reference's golden-value test style (exact count 97,568 at
@@ -20,7 +20,6 @@ from collections.abc import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 SEED = 42
@@ -137,23 +136,3 @@ def generate_transcripts(
 def generate_transcripts_pandas(n_convs: int, seed: int = SEED) -> pd.DataFrame:
     """Driver-side generation for small oracle fixtures (identical rows)."""
     return _gen_conv_batch(np.arange(n_convs, dtype=np.int64), seed)
-
-
-def generate_corp_dim(spark: SparkSession, n: int = 2000, seed: int = SEED) -> DataFrame:
-    """FIXTURES T2 — small dimension analogous to the reference corp_code
-    index (mapping at reference import_dart_data.py:346-364)."""
-    rng = np.random.default_rng(seed)
-    vocab = _vocab()
-    rows = []
-    for i in range(n):
-        k = int(rng.integers(1, 4))
-        name_toks = [vocab[int(rng.integers(30, 3000))] for _ in range(k)]
-        if i % 50 == 0:
-            name_toks[0] = f"samsu{i % 7}"
-        stock = f"{int(rng.integers(0, 999999)):06d}" if rng.random() < 0.6 else ""
-        d = np.datetime64("2020-01-01") + np.timedelta64(int(rng.integers(0, 1500)), "D")
-        rows.append((f"{i:08d}", " ".join(name_toks), stock, str(d)))
-    pdf = pd.DataFrame(rows, columns=["corp_code", "corp_name", "stock_code", "modify_date"])
-    pdf["modify_date"] = pd.to_datetime(pdf["modify_date"])
-    df = spark.createDataFrame(pdf)
-    return df.withColumn("modify_date", F.to_date("modify_date"))

@@ -98,20 +98,6 @@ def shingle_list(tokens: list[str], n: int, sep: str = SHINGLE_SEP) -> list[str]
     return [sep.join(tokens[j : j + n]) for j in range(len(tokens) - n + 1)]
 
 
-def make_shingle_tokenizer(n: int, sep: str = SHINGLE_SEP):
-    """Pandas tokenizer emitting word n-gram shingles (see shingle_list)."""
-
-    def fn(texts: pd.Series) -> pd.Series:
-        return tokenize_series(texts).map(lambda t: shingle_list(t, n, sep))
-
-    return fn
-
-
 def shingle_text(text: str, n: int, sep: str = SHINGLE_SEP) -> list[str]:
     """Driver-side shingle tokenizer (query analysis for shingle fields)."""
-    toks = tokenize_text(text)
-    if not toks:
-        return []
-    if len(toks) < n:
-        return [sep.join(toks)]
-    return [sep.join(toks[j : j + n]) for j in range(len(toks) - n + 1)]
+    return shingle_list(tokenize_text(text), n, sep)

@@ -5,14 +5,15 @@ load at reference import_dart_data.py:495-499,595-599; analyzed ``text``
 mappings at :346-364,383-443). This module is the from-scratch Spark-native
 replacement. Layout on disk (parquet; Iceberg-compatible table shapes):
 
-    <out>/postings/      seg=<s>/bucket=<b>/...  one row per (term, run):
-                         delta+varbyte doc_ids, varbyte tfs + dls, per-block
+    <out>/postings/      seg=<s>/field=<f>/bucket=<b>/  one row per
+                         (term, run), term-sorted: delta+varbyte doc_ids,
+                         varbyte tfs + dls (+ positions), per-block
                          (first_doc, max_tf, min_dl) metadata for block-max
-                         pruning
+                         pruning; every run is written by ``pack_runs_bulk``
     <out>/doc_stats/     seg=<s>/   (doc_id, conv_id, turn_idx, role, tool,
                          ts, dl) — metadata filters + length norms
-    <out>/term_seg_df/   seg=<s>/   per-segment partial document frequencies
-    <out>/term_dict/     (term, df) — global, published from partials
+    <out>/term_dict/     bucket=<b>/  (field, term, df, tlen) — global,
+                         df = sum of the postings' run counts
     <out>/meta.json      the commit record (``index.commit``): layout config,
                          per-field corpus counters (n_docs, avgdl,
                          total_tokens) and per-segment lineage (FIXTURES.md
@@ -34,7 +35,7 @@ Scale design (the 10^12-turn design point):
   data volume — crosses JVM->Arrow->Python exactly once, memory-local.
   Stopword skew is bounded *by construction*: a term's run within a
   partition holds at most that partition's doc count regardless of global
-  df (no salting pre-pass needed), and the encoder chunks groups at
+  df (no salting pre-pass needed), and ``pack_runs_bulk`` cuts runs at
   ``target_run``. ``merge.compact_index`` consolidates per-partition runs
   exactly as Lucene background merges consolidate flushed segments; the
   scorer is correct at any run granularity, so compaction is a pure
@@ -59,7 +60,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.codec import varbyte_encode_ex
-from ..functions.tokenizer import tokenize_col, tokenize_series
+from ..functions.tokenizer import shingle_list, tokenize_col, tokenize_series
 from .commit import FORMAT_VERSION, commit_meta, lineage_entry, read_json, read_meta
 
 K1 = 1.2
@@ -92,6 +93,15 @@ POSTINGS_SCHEMA = (
 )
 
 MAX_FIELDS = 8  # joint (field, term) code budget in the encoder sort key
+
+POSTINGS_PARTS = ("seg", "field", "bucket")
+# Row order of every postings file. A planned partitioned write sorts by
+# the partition columns unless its input already is, which would drop a
+# bare sort on `term`; leading with the partition columns keeps the files
+# term-sorted, so parquet row-group min/max stats on `term` let the pushed
+# In(term, ...) predicate skip whole row groups. run and min_doc make the
+# order depend on the runs only.
+POSTINGS_ORDER = (*POSTINGS_PARTS, "term", "run", "min_doc")
 
 
 def assign_doc_ids(
@@ -160,51 +170,82 @@ def assign_doc_ids(
     )
 
 
+def group_change(*keys: np.ndarray) -> np.ndarray:
+    """True at row 0 and wherever any of the (row-aligned, sorted) key
+    arrays differs from the row before: the first row of every group."""
+    change = np.empty(len(keys[0]), dtype=bool)
+    change[:1] = True
+    change[1:] = np.logical_or.reduce([k[1:] != k[:-1] for k in keys])
+    return change
+
+
 def pack_runs_bulk(
+    keys: tuple[np.ndarray, ...],
     docs: np.ndarray,
     tfs: np.ndarray,
     dls: np.ndarray,
-    starts: np.ndarray,
-    ends: np.ndarray,
-) -> dict:
-    """Vectorized packing of MANY posting groups at once: one varbyte pass
-    over the whole partition, per-group byte-offset slicing, and
-    ``reduceat`` block metadata. Per-group python cost drops from ~100 us
-    (dozens of small numpy allocations per group) to a few us — decisive
-    when local segment encoding emits one run per (partition, seg, term)
-    and groups average only tens of postings.
+    target_run: int,
+    poss: np.ndarray | None = None,
+) -> tuple[np.ndarray, dict]:
+    """The one postings-run writer: postings sorted by group (``keys``,
+    compared with :func:`group_change`) and doc_id within a group become
+    posting-run rows. Groups longer than ``target_run`` are cut into runs
+    of at most ``target_run`` postings. ``poss`` holds each posting's tf
+    token positions back to back; None or empty writes empty ``poss``
+    blobs (a positionless index).
+
+    Vectorized over MANY groups at once: one varbyte pass per stream over
+    the whole partition, per-run byte-offset slicing, and ``reduceat``
+    block metadata. Per-run python cost is a few us — decisive when local
+    segment encoding emits one run per (partition, seg, term) and runs
+    average only tens of postings.
 
     Block bound validity: tfn(tf, dl) = tf / (tf + k1*(1-b+b*dl/avgdl)) is
     increasing in tf and decreasing in dl, so tfn(max_tf, min_dl) is a
     conservative per-block upper bound for any avgdl — which lets us store
     avgdl-independent metadata and keep segments immutable across merges.
 
-    Returns columnar lists ready for DataFrame construction.
+    Returns ``(starts, columns)``: the first posting of each run (index
+    into the inputs, for the caller's group columns) and the run columns
+    of ``POSTINGS_SCHEMA`` from ``n`` on, ready for DataFrame
+    construction.
     """
-    n_groups = len(starts)
+    m = len(docs)
+    starts = np.flatnonzero(group_change(*keys))
+    pieces = (np.diff(np.append(starts, m)) + target_run - 1) // target_run
+    first_piece = np.repeat(np.cumsum(pieces) - pieces, pieces)
+    starts = np.repeat(starts, pieces) + (
+        np.arange(len(first_piece)) - first_piece
+    ) * target_run
+    ends = np.append(starts, m)[1:]
+    n_runs = len(starts)
+
     gaps = docs.copy()
     gaps[1:] -= docs[:-1]
     gaps[starts] = docs[starts]
-    gap_bytes, gap_len = varbyte_encode_ex(gaps)
-    tf_bytes, tf_len = varbyte_encode_ex(tfs)
-    dl_bytes, dl_len = varbyte_encode_ex(dls)
 
-    def offsets(lengths: np.ndarray) -> np.ndarray:
-        o = np.zeros(len(lengths) + 1, dtype=np.int64)
-        np.cumsum(lengths, out=o[1:])
-        return o
+    def blobs(values: np.ndarray, lo: np.ndarray, hi: np.ndarray) -> list:
+        # one varbyte pass, then each run's [lo, hi) values as bytes
+        data, lens = varbyte_encode_ex(values)
+        ofs = np.zeros(len(values) + 1, dtype=np.int64)
+        np.cumsum(lens, out=ofs[1:])
+        view = memoryview(data)
+        return [bytes(view[ofs[a]:ofs[b]]) for a, b in zip(lo, hi)]
 
-    gofs, tofs, dofs = offsets(gap_len), offsets(tf_len), offsets(dl_len)
+    if poss is not None and poss.size:
+        # token space: posting j's positions start at sum(tfs[:j])
+        tok = np.zeros(m + 1, dtype=np.int64)
+        np.cumsum(tfs, out=tok[1:])
+        poss_blobs = blobs(poss, tok[starts], tok[ends])
+    else:
+        poss_blobs = [b""] * n_runs
 
-    sizes = ends - starts
-    nb = (sizes + BLOCK_SIZE - 1) // BLOCK_SIZE
-    nb_ofs = np.zeros(n_groups + 1, dtype=np.int64)
+    nb = (ends - starts + BLOCK_SIZE - 1) // BLOCK_SIZE
+    nb_ofs = np.zeros(n_runs + 1, dtype=np.int64)
     np.cumsum(nb, out=nb_ofs[1:])
-    total_blocks = int(nb_ofs[-1])
-    grp_rep = np.repeat(np.arange(n_groups), nb)
-    intra = np.arange(total_blocks) - np.repeat(nb_ofs[:-1], nb)
-    bstarts = starts[grp_rep] + intra * BLOCK_SIZE
-    # blocks tile the partition contiguously, so reduceat's [idx_i, idx_i+1)
+    intra = np.arange(int(nb_ofs[-1])) - np.repeat(nb_ofs[:-1], nb)
+    bstarts = np.repeat(starts, nb) + intra * BLOCK_SIZE
+    # blocks tile the postings contiguously, so reduceat's [idx_i, idx_i+1)
     # regions are exactly the blocks
     bmax_tf = np.maximum.reduceat(tfs, bstarts).astype(np.int32)
     bmin_dl = np.minimum(
@@ -212,25 +253,21 @@ def pack_runs_bulk(
     ).astype(np.int32)
     bfirst = docs[bstarts]
 
-    gv, tv, dv = memoryview(gap_bytes), memoryview(tf_bytes), memoryview(dl_bytes)
-    out = {
-        "n": sizes.tolist(),
+    def per_run(blocks: np.ndarray) -> list:
+        return [blocks[nb_ofs[i]:nb_ofs[i + 1]].tolist() for i in range(n_runs)]
+
+    return starts, {
+        "n": (ends - starts).tolist(),
         "min_doc": docs[starts].tolist(),
         "max_doc": docs[ends - 1].tolist(),
-        "docs": [bytes(gv[gofs[s]:gofs[e]]) for s, e in zip(starts, ends)],
-        "tfs": [bytes(tv[tofs[s]:tofs[e]]) for s, e in zip(starts, ends)],
-        "dls": [bytes(dv[dofs[s]:dofs[e]]) for s, e in zip(starts, ends)],
-        "block_first": [
-            bfirst[nb_ofs[i]:nb_ofs[i + 1]].tolist() for i in range(n_groups)
-        ],
-        "block_max_tf": [
-            bmax_tf[nb_ofs[i]:nb_ofs[i + 1]].tolist() for i in range(n_groups)
-        ],
-        "block_min_dl": [
-            bmin_dl[nb_ofs[i]:nb_ofs[i + 1]].tolist() for i in range(n_groups)
-        ],
+        "docs": blobs(gaps, starts, ends),
+        "tfs": blobs(tfs, starts, ends),
+        "dls": blobs(dls, starts, ends),
+        "poss": poss_blobs,
+        "block_first": per_run(bfirst),
+        "block_max_tf": per_run(bmax_tf),
+        "block_min_dl": per_run(bmin_dl),
     }
-    return out
 
 
 def _finish_encode(
@@ -238,16 +275,14 @@ def _finish_encode(
     codes: np.ndarray,
     doc_rep: np.ndarray,
     dl_rep: np.ndarray,
+    pos_rep: np.ndarray | None,
     uniques: np.ndarray,
     n_fields: int,
-    doc_min: int,
-    doc_max: int,
     target_run: int,
     run_id: int,
-    pos_rep: np.ndarray | None = None,
 ) -> pd.DataFrame:
-    """Shared encode tail: composite-key sort -> run-length tf -> group ->
-    chunk at target_run -> bulk delta+varbyte pack -> posting-run rows.
+    """Encode tail: composite-key sort -> run-length tf -> bulk pack ->
+    posting-run rows.
 
     ``codes`` is the joint (term, field) id (term_code * n_fields + field)
     so fields need no extra sort-key bits. One composite-key argsort instead
@@ -258,9 +293,9 @@ def _finish_encode(
     and emit a silently corrupt index, so the bounds are checked here and a
     (slower but unconditionally correct) 3-key lexsort takes over for freak
     partitions that exceed them."""
+    doc_min = int(doc_rep.min())
     local_doc = (doc_rep - doc_min).astype(np.uint64)
-    doc_span = int(doc_max - doc_min)
-    if len(uniques) * n_fields < (1 << 25) and doc_span < (1 << 30):
+    if len(uniques) * n_fields < (1 << 25) and int(doc_rep.max()) - doc_min < (1 << 30):
         key = (
             (seg_rep.astype(np.uint64) << np.uint64(55))
             | (codes.astype(np.uint64) << np.uint64(30))
@@ -269,79 +304,39 @@ def _finish_encode(
         order = np.argsort(key, kind="stable")
     else:
         order = np.lexsort((local_doc, codes, seg_rep))
-    seg_s, code_s, doc_s, dl_s = (
-        seg_rep[order], codes[order], doc_rep[order], dl_rep[order],
-    )
-    pos_s = pos_rep[order] if pos_rep is not None else None
-    n = len(doc_s)
+    seg_s, code_s, doc_s = seg_rep[order], codes[order], doc_rep[order]
     # collapse duplicate (seg, field·term, doc) rows to tf via run-length
-    new_post = np.empty(n, dtype=bool)
-    new_post[0] = True
-    new_post[1:] = (
-        (doc_s[1:] != doc_s[:-1])
-        | (code_s[1:] != code_s[:-1])
-        | (seg_s[1:] != seg_s[:-1])
+    pstarts = np.flatnonzero(group_change(doc_s, code_s, seg_s))
+    tfs = np.diff(np.append(pstarts, len(doc_s)))
+    segs, code_p = seg_s[pstarts], code_s[pstarts]
+    # token positions: within a posting, the stable sort preserved the
+    # ascending in-document order, so the sorted stream is in token space
+    starts, cols = pack_runs_bulk(
+        (segs, code_p), doc_s[pstarts], tfs, dl_rep[order[pstarts]],
+        target_run, None if pos_rep is None else pos_rep[order],
     )
-    pstarts = np.flatnonzero(new_post)
-    tfs = np.diff(np.append(pstarts, n)).astype(np.int64)
-    docs = doc_s[pstarts]
-    dls = dl_s[pstarts]
-    segs = seg_s[pstarts]
-    code_p = code_s[pstarts]
-    m = len(docs)
-    change = np.empty(m, dtype=bool)
-    change[0] = True
-    change[1:] = (segs[1:] != segs[:-1]) | (code_p[1:] != code_p[:-1])
-    starts = np.flatnonzero(change)
-    ends = np.append(starts[1:], m)
-    if ((ends - starts) > target_run).any():
-        pieces = []
-        for s, e in zip(starts, ends):
-            if e - s > target_run:
-                pieces.extend(range(s, e, target_run))
-            else:
-                pieces.append(s)
-        starts = np.asarray(pieces, dtype=np.int64)
-        ends = np.append(starts[1:], m)
-    fields = pack_runs_bulk(docs, tfs, dls, starts, ends)
-    # token positions: within a posting, stable sort preserved the original
-    # ascending in-document order, so the sorted position stream sliced at
-    # run boundaries (token space = cumulative tf) is each run's "poss"
-    if pos_s is not None:
-        pbytes, plens = varbyte_encode_ex(pos_s)
-        tok_byte_ofs = np.zeros(n + 1, dtype=np.int64)
-        np.cumsum(plens, out=tok_byte_ofs[1:])
-        pv = memoryview(pbytes)
-        tok_of_post = pstarts  # posting j starts at token pstarts[j]
-        run_tok_start = tok_of_post[starts]
-        run_tok_end = np.append(tok_of_post[starts[1:]], n)
-        fields["poss"] = [
-            bytes(pv[tok_byte_ofs[s]:tok_byte_ofs[e]])
-            for s, e in zip(run_tok_start, run_tok_end)
-        ]
-    else:
-        fields["poss"] = [b""] * len(starts)
     emit_code = code_p[starts]
-    if n_fields > 1:
-        emit_term = uniques[emit_code // n_fields]
-        emit_field = (emit_code % n_fields).astype("int32")
-    else:
-        emit_term = uniques[emit_code]
-        emit_field = np.zeros(len(starts), dtype="int32")
     return pd.DataFrame(
         {
             "seg": segs[starts].astype("int32"),
-            "field": emit_field,
-            "term": emit_term,
+            "field": (emit_code % n_fields).astype("int32"),
+            "term": uniques[emit_code // n_fields],
             "run": np.full(len(starts), run_id, dtype=np.int32),
-            **fields,
+            **cols,
         }
     )
 
 
-def _make_doc_encoder(target_run: int, store_positions: bool = False):
-    """Partition-level encoder over single-field document rows
-    (seg, doc_id, text).
+def _make_multi_doc_encoder(
+    target_run: int, src_fields: list, store_positions: bool = False
+):
+    """Partition-level encoder over document rows (seg, doc_id, src0,
+    src1, ...): one text column per DISTINCT source column. ``src_fields``
+    lists, per source column, its derived fields [(field_id, ngram|None),
+    ...]: a source indexed both standard and as an n-gram shingle subfield
+    is shipped and tokenized ONCE; the shingle stream is derived from the
+    same token lists (no second Arrow crossing, no second regex pass). A
+    single-field index is the one-source, one-field case.
 
     The whole token pipeline runs vectorized inside Python: pandas-regex
     tokenize -> pd.factorize (hash-based term ids) -> composite-key sort ->
@@ -355,8 +350,12 @@ def _make_doc_encoder(target_run: int, store_positions: bool = False):
     run id = TaskContext partition id: unique per partition, which is all
     the scorer needs (runs are independent physical chunks).
     """
+    fids = [fid for fields in src_fields for fid, _ in fields]
+    n_fields = len(fids)
 
     def encode_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        from itertools import chain
+
         from pyspark import TaskContext
 
         parts = [b for b in batches if len(b)]
@@ -365,106 +364,41 @@ def _make_doc_encoder(target_run: int, store_positions: bool = False):
         pdf = pd.concat(parts, ignore_index=True)
         run_id = TaskContext.get().partitionId() if TaskContext.get() else 0
 
-        from itertools import chain
-
-        toks = tokenize_series(pdf["text"])
-        dl = toks.str.len().to_numpy(dtype=np.int64)
+        # one token list per (field, doc) row, fields in ``fids`` order
+        field_toks = []
+        for si, fields in enumerate(src_fields):
+            toks = tokenize_series(pdf[f"src{si}"])
+            for _fid, ngram in fields:
+                field_toks.append(
+                    toks if ngram is None
+                    else toks.map(lambda t, n=ngram: shingle_list(t, n))
+                )
+        dl = np.concatenate(
+            [t.str.len().to_numpy(dtype=np.int64) for t in field_toks]
+        )
         total = int(dl.sum())
         if total == 0:
             return
-        flat = np.fromiter(chain.from_iterable(toks), dtype=object, count=total)
+        flat = np.fromiter(
+            chain.from_iterable(chain.from_iterable(field_toks)),
+            dtype=object, count=total,
+        )
         codes, uniques = pd.factorize(flat, sort=False)
-        seg_rep = np.repeat(pdf["seg"].to_numpy(dtype=np.int32), dl)
-        doc_ids = pdf["doc_id"].to_numpy(dtype=np.int64)
-        doc_rep = np.repeat(doc_ids, dl)
-        dl_rep = np.repeat(dl, dl)
+        n_docs = len(pdf)
+        field_rep = np.repeat(
+            np.repeat(np.asarray(fids, dtype=np.int64), n_docs), dl
+        )
         pos_rep = None
         if store_positions:
             row_ofs = np.zeros(len(dl), dtype=np.int64)
             np.cumsum(dl[:-1], out=row_ofs[1:])
             pos_rep = np.arange(total, dtype=np.int64) - np.repeat(row_ofs, dl)
         yield _finish_encode(
-            seg_rep, codes, doc_rep, dl_rep, uniques, 1,
-            int(doc_ids.min()), int(doc_ids.max()), target_run, run_id,
-            pos_rep=pos_rep,
-        )
-
-    return encode_partition
-
-
-def _make_multi_doc_encoder(
-    target_run: int, n_fields: int, src_fields: dict, store_positions: bool = False
-):
-    """Partition-level encoder over (seg, doc_id, src, text) rows — one row
-    per DISTINCT source column of each document. ``src_fields`` maps the
-    src id to its derived fields [(field_id, ngram|None), ...]: a source
-    indexed both standard and as an n-gram shingle subfield is shipped and
-    tokenized ONCE; the shingle stream is derived from the same token
-    lists (no second Arrow crossing, no second regex pass)."""
-
-    def encode_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from itertools import chain
-
-        from pyspark import TaskContext
-
-        from ..functions.tokenizer import shingle_list
-
-        parts = [b for b in batches if len(b)]
-        if not parts:
-            return
-        pdf = pd.concat(parts, ignore_index=True)
-        run_id = TaskContext.get().partitionId() if TaskContext.get() else 0
-
-        src_arr = pdf["src"].to_numpy(dtype=np.int64)
-        seg_np = pdf["seg"].to_numpy(dtype=np.int32)
-        doc_np = pdf["doc_id"].to_numpy(dtype=np.int64)
-        flat_parts, seg_parts, doc_parts, dl_parts, field_parts = [], [], [], [], []
-        pos_parts = []
-        for src_id, fields in src_fields.items():
-            sel = np.flatnonzero(src_arr == src_id)
-            if not sel.size:
-                continue
-            toks = tokenize_series(pdf["text"].iloc[sel])
-            for fid, ngram in fields:
-                ftoks = (
-                    toks
-                    if ngram is None
-                    else toks.map(lambda t, n=ngram: shingle_list(t, n))
-                )
-                dl = ftoks.str.len().to_numpy(dtype=np.int64)
-                total = int(dl.sum())
-                if total == 0:
-                    continue
-                flat_parts.append(
-                    np.fromiter(chain.from_iterable(ftoks), dtype=object, count=total)
-                )
-                seg_parts.append(np.repeat(seg_np[sel], dl))
-                doc_parts.append(np.repeat(doc_np[sel], dl))
-                dl_parts.append(np.repeat(dl, dl))
-                field_parts.append(np.full(total, fid, dtype=np.int64))
-                if store_positions:
-                    row_ofs = np.zeros(len(dl), dtype=np.int64)
-                    np.cumsum(dl[:-1], out=row_ofs[1:])
-                    pos_parts.append(
-                        np.arange(total, dtype=np.int64) - np.repeat(row_ofs, dl)
-                    )
-        if not flat_parts:
-            return
-        flat = np.concatenate(flat_parts)
-        codes, uniques = pd.factorize(flat, sort=False)
-        codes = codes.astype(np.int64) * n_fields + np.concatenate(field_parts)
-        yield _finish_encode(
-            np.concatenate(seg_parts),
-            codes,
-            np.concatenate(doc_parts),
-            np.concatenate(dl_parts),
-            uniques,
-            n_fields,
-            int(doc_np.min()),
-            int(doc_np.max()),
-            target_run,
-            run_id,
-            pos_rep=np.concatenate(pos_parts) if store_positions else None,
+            np.repeat(np.tile(pdf["seg"].to_numpy(dtype=np.int32), n_fields), dl),
+            codes.astype(np.int64) * n_fields + field_rep,
+            np.repeat(np.tile(pdf["doc_id"].to_numpy(dtype=np.int64), n_fields), dl),
+            np.repeat(dl, dl),
+            pos_rep, uniques, n_fields, target_run, run_id,
         )
 
     return encode_partition
@@ -481,14 +415,15 @@ def _clear_root_files(table_dir: str) -> None:
                 os.remove(p)
 
 
-def _seg_col(key_col, n_segments: int):
-    return F.pmod(
-        F.crc32(F.encode(key_col.cast("string"), "utf-8")), F.lit(n_segments)
-    ).cast("int")
+def bucket_col(col, n_buckets: int):
+    """crc32(col) mod n_buckets as a Spark expression: the term bucket of
+    postings and term_dict, and the segment of a document key. Agrees with
+    :func:`bucket_of`."""
+    return F.pmod(F.crc32(F.encode(col, "utf-8")), F.lit(n_buckets)).cast("int")
 
 
 def bucket_of(term: str, n_buckets: int) -> int:
-    """Driver-side bucket computation — must match F.crc32-based bucketing."""
+    """Driver-side :func:`bucket_col`."""
     import zlib
 
     return zlib.crc32(term.encode("utf-8")) % n_buckets
@@ -533,7 +468,7 @@ def _layout_mismatches(
 def _wipe_index_tables(out_dir: str) -> None:
     import shutil
 
-    # corpus_stats and manifests: metadata tables of format_version < 1
+    # term_seg_df, corpus_stats and manifests: tables earlier builds wrote
     for sub in (
         "postings", "doc_stats", "term_seg_df", "term_dict",
         "corpus_stats", "manifests", "tombstones",
@@ -606,7 +541,7 @@ def build_index(
             old_meta = None
 
     base = transcripts.withColumn(
-        "seg", _seg_col(F.col(doc_key_cols[0]), cfg.n_segments)
+        "seg", bucket_col(F.col(doc_key_cols[0]).cast("string"), cfg.n_segments)
     )
 
     # --- per-segment input fingerprints (order-independent bit_xor) ---
@@ -667,37 +602,25 @@ def _encode_postings(
     """(doc rows with seg, doc_id, source text cols) -> encoded posting runs
     with bucket column. Shared by the full build and the append path.
 
-    Multi-field: rows are stacked per DISTINCT source column (not per
-    field), so a text column indexed both standard and as a shingle
+    Each DISTINCT source column (not each field) is one encoder input
+    column, so a text column indexed both standard and as a shingle
     subfield crosses Arrow exactly once and is tokenized exactly once —
     the derived fields' token streams are built from the same token lists
     inside the encoder."""
-    n_fields = len(field_sources)
-    if n_fields == 1:
-        enc_in = build_docs.select(
-            "seg", "doc_id", F.col(field_sources[0][0]).alias("text")
-        )
-        encoder = _make_doc_encoder(target_run, store_positions)
-    else:
-        srcs = list(dict.fromkeys(s for s, _ in field_sources))
-        src_fields = {
-            si: [
-                (fi, ngram)
-                for fi, (s2, ngram) in enumerate(field_sources)
-                if s2 == s
-            ]
-            for si, s in enumerate(srcs)
-        }
-        # stack is a narrow generator (no shuffle): encode stays partition-local
-        pairs = ", ".join(f"{i}, `{s}`" for i, s in enumerate(srcs))
-        enc_in = build_docs.selectExpr(
-            "seg", "doc_id", f"stack({len(srcs)}, {pairs}) AS (src, text)"
-        )
-        encoder = _make_multi_doc_encoder(target_run, n_fields, src_fields, store_positions)
-    encoded = enc_in.mapInPandas(encoder, schema=POSTINGS_SCHEMA)
-    return encoded.withColumn(
-        "bucket", F.pmod(F.crc32(F.encode("term", "utf-8")), F.lit(n_buckets)).cast("int")
+    srcs = list(dict.fromkeys(s for s, _ in field_sources))
+    src_fields = [
+        [(fi, ngram) for fi, (s2, ngram) in enumerate(field_sources) if s2 == s]
+        for s in srcs
+    ]
+    enc_in = build_docs.select(
+        "seg", "doc_id",
+        *[F.col(f"`{s}`").alias(f"src{i}") for i, s in enumerate(srcs)],
     )
+    encoded = enc_in.mapInPandas(
+        _make_multi_doc_encoder(target_run, src_fields, store_positions),
+        schema=POSTINGS_SCHEMA,
+    )
+    return encoded.withColumn("bucket", bucket_col("term", n_buckets))
 
 
 def _resolve_fields(text_col, text_cols, shingle_fields):
@@ -762,13 +685,10 @@ def _write_docs_and_postings(
 
     def _write_postings():
         (
-            # term-sorted files: parquet row-group min/max stats on
-            # `term` make the pushed In(term, ...) predicate skip whole
-            # row groups
-            encoded.repartition("seg", "field", "bucket")
-            .sortWithinPartitions("term")
+            encoded.repartition(*POSTINGS_PARTS)
+            .sortWithinPartitions(*POSTINGS_ORDER)
             .write.mode(mode)
-            .partitionBy("seg", "field", "bucket")
+            .partitionBy(*POSTINGS_PARTS)
             .parquet(f"{out_dir}/postings")
         )
 
@@ -857,7 +777,7 @@ def _build_segments(
         # meta.json early-return normally prevents reaching here over a
         # live index, but if meta.json is missing/corrupt while the data
         # tables survive, an empty run must not destroy them.
-        for table in ("doc_stats", "postings", "term_seg_df"):
+        for table in ("doc_stats", "postings"):
             tdir = os.path.join(out_dir, table)
             if os.path.isdir(tdir) and any(
                 e.startswith(("seg=", "bucket=")) or e.endswith(".parquet")
@@ -872,7 +792,7 @@ def _build_segments(
         # a prior empty build left root-level files; partitioned dynamic
         # overwrite would never remove them and partition discovery would
         # then see conflicting structures — clear them first
-        for table in ("doc_stats", "postings", "term_seg_df"):
+        for table in ("doc_stats", "postings"):
             _clear_root_files(os.path.join(out_dir, table))
     stats_w = build_docs.select(*stats_cols)
 
@@ -909,78 +829,38 @@ def _build_segments(
         phases["doc_stats_and_encode_write"] = round(time.time() - tp, 3)
     tp = time.time()
 
-    # --- exact per-segment df, derived from the encoded postings (tiny:
-    # one row per run) — feeds resume stats and the published term_dict ---
-    built_post = spark.read.parquet(f"{out_dir}/postings").filter(
-        F.col("seg").isin([int(s) for s in todo])
+    # --- global stats, three independent reads of the written tables:
+    # term_dict and the rebuilt segments' lineage counts from the postings
+    # (tiny: one row per run), the corpus counters from doc_stats ---
+    from concurrent.futures import ThreadPoolExecutor
+
+    post = spark.read.parquet(f"{out_dir}/postings")
+    seg_counts = (
+        post.filter(F.col("seg").isin([int(s) for s in todo]))
+        .groupBy("seg")
+        .agg(
+            F.countDistinct("field", "term").alias("n_terms"),
+            F.sum("n").alias("n_postings"),
+        )
     )
-    seg_df = built_post.groupBy("seg", "field", "term").agg(F.sum("n").alias("df_p"))
-    seg_df = seg_df.persist()
-    persisted.append(seg_df)
-    n_fields = len(field_sources)
-    if empty_build:
-        seg_df.repartition(1).write.mode("overwrite").parquet(
-            f"{out_dir}/term_seg_df"
+    carry = inheritable_thread_target(spark)
+    with ThreadPoolExecutor(max_workers=3) as pool:
+        f_dict = pool.submit(carry(publish_term_dict), post, out_dir, cfg.n_buckets)
+        f_corpus = pool.submit(
+            carry(corpus_counters),
+            spark.read.parquet(f"{out_dir}/doc_stats"), len(field_sources),
         )
-        publish_term_dict(spark, out_dir, cfg.n_buckets)
-        corpus = corpus_counters(spark.read.parquet(f"{out_dir}/doc_stats"), n_fields)
-    else:
-        from concurrent.futures import ThreadPoolExecutor
-
-        # the in-memory partials are the WHOLE dictionary only when no
-        # segment was skipped AND no prior build left partials on disk
-        # (a force-rebuild over an existing dir may leave orphan seg=
-        # partitions that dynamic overwrite never touches — those must
-        # keep flowing into term_dict exactly as before)
-        tsd_dir = os.path.join(out_dir, "term_seg_df")
-        had_prior_partials = os.path.isdir(tsd_dir) and any(
-            e.startswith("seg=") for e in os.listdir(tsd_dir)
-        )
-        full_build = not done and not had_prior_partials
-
-        def _write_seg_df():
-            (
-                seg_df.repartition("seg")
-                .write.mode("overwrite")
-                .partitionBy("seg")
-                .parquet(f"{out_dir}/term_seg_df")
-            )
-
-        carry = inheritable_thread_target(spark)
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            fs = [pool.submit(carry(_write_seg_df))]
-            # the corpus counters read the already-written doc_stats
-            f_corpus = pool.submit(
-                carry(corpus_counters),
-                spark.read.parquet(f"{out_dir}/doc_stats"), n_fields,
-            )
-            if full_build:
-                # the persisted partials ARE the whole dictionary — publish
-                # straight from memory, concurrently with the partial write
-                fs.append(
-                    pool.submit(
-                        carry(publish_term_dict),
-                        spark, out_dir, cfg.n_buckets, seg_df=seg_df,
-                    )
-                )
-            for f in fs:
-                f.result()
-            corpus = f_corpus.result()
-            if not full_build:
-                # resume keeps skipped segments' partials on disk — the
-                # dictionary must union them, so publish AFTER the write
-                publish_term_dict(spark, out_dir, cfg.n_buckets)
+        f_counts = pool.submit(carry(seg_counts.collect))
+        f_dict.result()
+        corpus = f_corpus.result()
+        seg_metrics = {
+            r["seg"]: (r["n_terms"], r["n_postings"]) for r in f_counts.result()
+        }
     phases["publish_stats"] = round(time.time() - tp, 3)
     tp = time.time()
 
     # --- commit: lineage of the rebuilt segments + corpus counters, one
     # atomic meta.json replace after the last data write ---
-    seg_metrics = {
-        r["seg"]: (r["n_terms"], r["n_postings"])
-        for r in seg_df.groupBy("seg")
-        .agg(F.count("*").alias("n_terms"), F.sum("df_p").alias("n_postings"))
-        .collect()
-    }
     lineage = dict(old_meta["lineage"]) if old_meta else {}
     for seg in todo:
         fp, ndocs = fingerprints[seg]
@@ -1007,31 +887,24 @@ def _build_segments(
     }
 
 
-def publish_term_dict(
-    spark: SparkSession,
-    out_dir: str,
-    n_buckets: int,
-    seg_df: DataFrame | None = None,
-) -> None:
-    """Re-derive the global (field, term, df) dictionary from per-segment
-    partials. term_dict is directory-partitioned by the same crc32 term
-    bucket as the postings, so a query's df lookup prunes to the buckets its
-    terms hash to instead of scanning the whole dictionary. ``seg_df``
-    short-circuits the disk round-trip when the caller already holds ALL
-    partials in memory (the fresh full-build path)."""
-    if seg_df is None:
-        seg_df = spark.read.parquet(f"{out_dir}/term_seg_df")
+def publish_term_dict(postings: DataFrame, out_dir: str, n_buckets: int) -> None:
+    """Derive the global (field, term, df) dictionary from ``postings``,
+    the read of ``out_dir``'s postings table (callers share the read with
+    their own run counts): df is the sum of ``n`` over a term's runs (a document holds a term
+    once per field, and runs never share a posting). The one writer of
+    term_dict, for build, resume, append and compaction. term_dict is
+    directory-partitioned by the same crc32 term bucket as the postings,
+    so a query's df lookup prunes to the buckets its terms hash to instead
+    of scanning the whole dictionary; files are term-sorted (see
+    ``POSTINGS_ORDER``)."""
     (
-        seg_df.groupBy("field", "term")
-        .agg(F.sum("df_p").alias("df"))
+        postings.groupBy("field", "term")
+        .agg(F.sum("n").alias("df"))
         # tlen feeds the fuzzy-expansion length-band pushdown
         .withColumn("tlen", F.length("term"))
-        .withColumn(
-            "bucket",
-            F.pmod(F.crc32(F.encode("term", "utf-8")), F.lit(n_buckets)).cast("int"),
-        )
+        .withColumn("bucket", bucket_col("term", n_buckets))
         .repartition("bucket")
-        .sortWithinPartitions("term")
+        .sortWithinPartitions("bucket", "term")
         .write.mode("overwrite")
         .partitionBy("bucket")
         .parquet(f"{out_dir}/term_dict")
@@ -1061,7 +934,8 @@ def append_index(
 
     Incremental updates: the commit record's corpus counters grow by the
     batch's deltas (no corpus scan beyond one column-pruned max-key probe),
-    term_dict is re-published from per-seg df partials, and each touched
+    term_dict is re-published from the postings' run counts (one row per
+    run, no blob column read), and each touched
     segment's lineage fingerprint is XOR-combined (bit_xor is associative,
     so old_fp XOR batch_fp = full-input fp — a later ``build_index`` resume
     sees consistent fingerprints and skips).
@@ -1113,7 +987,9 @@ def append_index(
     commit_meta(index_dir, {**meta, "lineage": lineage})
 
     src_cols = list(dict.fromkeys(s for s, _ in field_sources))
-    seg_batch = batch.withColumn("seg", _seg_col(F.col(doc_key_cols[0]), n_segments))
+    seg_batch = batch.withColumn(
+        "seg", bucket_col(F.col(doc_key_cols[0]).cast("string"), n_segments)
+    )
     persisted: list = []
     try:
         docs = assign_doc_ids(
@@ -1126,16 +1002,12 @@ def append_index(
             docs, field_sources, target_run, n_buckets,
             store_positions=bool(meta["store_positions"]),
         )
-        encoded = encoded.persist()  # batch-sized; reused for seg_df partials
-        persisted.append(encoded)
         _write_docs_and_postings(
             spark, docs.select(*stats_cols), encoded, index_dir, "append"
         )
-        seg_df = encoded.groupBy("seg", "field", "term").agg(F.sum("n").alias("df_p"))
-        seg_df.write.mode("append").partitionBy("seg").parquet(
-            f"{index_dir}/term_seg_df"
+        publish_term_dict(
+            spark.read.parquet(f"{index_dir}/postings"), index_dir, n_buckets
         )
-        publish_term_dict(spark, index_dir, n_buckets)
 
         # one pass over the batch: per-seg fingerprints (combined = old XOR
         # batch, order-independent) and the corpus counters' token deltas

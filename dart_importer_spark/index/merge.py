@@ -39,7 +39,17 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.codec import decode_runs
-from .build import POSTINGS_SCHEMA, corpus_counters, pack_runs_bulk, read_if_written
+from .build import (
+    POSTINGS_ORDER,
+    POSTINGS_PARTS,
+    POSTINGS_SCHEMA,
+    bucket_col,
+    corpus_counters,
+    group_change,
+    pack_runs_bulk,
+    publish_term_dict,
+    read_if_written,
+)
 from .commit import commit_meta, lineage_entry, read_meta
 
 MERGED_SEG = -1  # seg id marking post-compaction runs
@@ -48,27 +58,6 @@ EXPLODED_SCHEMA = (
     "field int, term string, mgrp int, doc_id long, tf long, dl long, "
     "poss array<long>"
 )
-
-
-def _chunk_groups(grp_post: np.ndarray, target_run: int):
-    """Group-change boundaries over a sorted group-id array, with oversize
-    groups chunked at target_run. Returns (starts, ends)."""
-    m = len(grp_post)
-    change = np.empty(m, dtype=bool)
-    change[0] = True
-    change[1:] = grp_post[1:] != grp_post[:-1]
-    starts = np.flatnonzero(change)
-    ends = np.append(starts[1:], m)
-    if ((ends - starts) > target_run).any():
-        pieces = []
-        for s, e in zip(starts, ends):
-            if e - s > target_run:
-                pieces.extend(range(s, e, target_run))
-            else:
-                pieces.append(s)
-        starts = np.asarray(pieces, dtype=np.int64)
-        ends = np.append(starts[1:], m)
-    return starts, ends
 
 
 def _explode_runs(batches) -> "Iterator[pd.DataFrame]":
@@ -99,9 +88,12 @@ def _explode_runs(batches) -> "Iterator[pd.DataFrame]":
 
 
 def _make_exploded_packer(target_run: int):
-    """Re-pack exploded postings (sorted by term, mgrp, doc_id) into runs."""
+    """Re-pack exploded postings (sorted by field, term, mgrp, doc_id) into
+    runs."""
 
     def pack(batches) -> "Iterator[pd.DataFrame]":
+        from itertools import chain
+
         parts = [b for b in batches if len(b)]
         if not parts:
             return
@@ -109,78 +101,25 @@ def _make_exploded_packer(target_run: int):
         flds = pdf["field"].to_numpy(dtype=np.int32)
         terms = pdf["term"].to_numpy(dtype=object)
         mgrps = pdf["mgrp"].to_numpy(dtype=np.int64)
-        docs = pdf["doc_id"].to_numpy(dtype=np.int64)
-        tfs = pdf["tf"].to_numpy(dtype=np.int64)
-        dls = pdf["dl"].to_numpy(dtype=np.int64)
-        m = len(docs)
-        g_change = np.empty(m, dtype=bool)
-        g_change[0] = True
-        g_change[1:] = (
-            (flds[1:] != flds[:-1])
-            | (terms[1:] != terms[:-1])
-            | (mgrps[1:] != mgrps[:-1])
+        starts, cols = pack_runs_bulk(
+            (flds, terms, mgrps),
+            pdf["doc_id"].to_numpy(dtype=np.int64),
+            pdf["tf"].to_numpy(dtype=np.int64),
+            pdf["dl"].to_numpy(dtype=np.int64),
+            target_run,
+            np.fromiter(chain.from_iterable(pdf["poss"]), dtype=np.int64),
         )
-        grp = np.cumsum(g_change) - 1
-        starts, ends = _chunk_groups(grp, target_run)
-        fields = pack_runs_bulk(docs, tfs, dls, starts, ends)
-        fields["poss"] = _pack_positions_from_lists(pdf["poss"], tfs, starts, ends)
         yield pd.DataFrame(
             {
                 "seg": np.full(len(starts), MERGED_SEG, dtype=np.int32),
                 "field": flds[starts],
                 "term": terms[starts],
                 "run": mgrps[starts].astype(np.int32),
-                **fields,
+                **cols,
             }
         )
 
     return pack
-
-
-def _pack_positions_from_lists(pos_series, tfs, starts, ends):
-    """Re-encode per-posting position lists (exploded path) into per-run
-    varbyte blobs; empty lists everywhere -> empty blobs."""
-    from itertools import chain
-
-    total = int(tfs.sum())
-    flat = np.fromiter(
-        chain.from_iterable(pos_series), dtype=np.int64, count=-1
-    ) if total else np.empty(0, dtype=np.int64)
-    if flat.size == 0:
-        return [b""] * len(starts)
-    from ..functions.codec import varbyte_encode_ex
-
-    pbytes, plens = varbyte_encode_ex(flat)
-    tok_byte_ofs = np.zeros(len(flat) + 1, dtype=np.int64)
-    np.cumsum(plens, out=tok_byte_ofs[1:])
-    tok_of_post = np.zeros(len(tfs) + 1, dtype=np.int64)
-    np.cumsum(tfs, out=tok_of_post[1:])
-    pv = memoryview(pbytes)
-    out = []
-    for s, e in zip(starts, ends):
-        b0 = tok_byte_ofs[tok_of_post[s]]
-        b1 = tok_byte_ofs[tok_of_post[e]]
-        out.append(bytes(pv[b0:b1]))
-    return out
-
-
-def _pack_positions_from_stream(poss, tfs_sorted, starts, ends):
-    """Slice an already-sorted position stream into per-run varbyte blobs
-    (broadcast merge path)."""
-    from ..functions.codec import varbyte_encode_ex
-
-    if poss.size == 0:
-        return [b""] * len(starts)
-    pbytes, plens = varbyte_encode_ex(poss)
-    tok_byte_ofs = np.zeros(len(poss) + 1, dtype=np.int64)
-    np.cumsum(plens, out=tok_byte_ofs[1:])
-    tok_of_post = np.zeros(len(tfs_sorted) + 1, dtype=np.int64)
-    np.cumsum(tfs_sorted, out=tok_of_post[1:])
-    pv = memoryview(pbytes)
-    return [
-        bytes(pv[tok_byte_ofs[tok_of_post[s]]:tok_byte_ofs[tok_of_post[e]]])
-        for s, e in zip(starts, ends)
-    ]
 
 
 def compact_index(
@@ -257,15 +196,8 @@ def compact_index(
         flds = pdf["field"].to_numpy(dtype=np.int32)
         terms = pdf["term"].to_numpy(dtype=object)
         mgrps = pdf["mgrp"].to_numpy(dtype=np.int64)
-        n_runs = len(pdf)
         # run -> merge-group id (runs arrive sorted by (field, term, mgrp))
-        g_change = np.empty(n_runs, dtype=bool)
-        g_change[0] = True
-        g_change[1:] = (
-            (flds[1:] != flds[:-1])
-            | (terms[1:] != terms[:-1])
-            | (mgrps[1:] != mgrps[:-1])
-        )
+        g_change = group_change(flds, terms, mgrps)
         grp_run = np.cumsum(g_change) - 1
         first_run = np.flatnonzero(g_change)  # first run index of each group
 
@@ -298,21 +230,19 @@ def compact_index(
             docs, tfs, dls, grp_post = (
                 docs[keep], tfs[keep], dls[keep], grp_post[keep],
             )
-        m = len(docs)
-        if m == 0:
+        if not len(docs):
             return
-        starts, ends = _chunk_groups(grp_post, target_run)
-        fields = pack_runs_bulk(docs, tfs, dls, starts, ends)
-        fields["poss"] = _pack_positions_from_stream(poss, tfs, starts, ends)
-        emit_grp = grp_post[starts]
-        emit_run_idx = first_run[emit_grp]
+        starts, cols = pack_runs_bulk(
+            (grp_post,), docs, tfs, dls, target_run, poss
+        )
+        emit_run_idx = first_run[grp_post[starts]]
         yield pd.DataFrame(
             {
                 "seg": np.full(len(starts), MERGED_SEG, dtype=np.int32),
                 "field": flds[emit_run_idx],
                 "term": terms[emit_run_idx],
                 "run": mgrps[emit_run_idx].astype(np.int32),
-                **fields,
+                **cols,
             }
         )
 
@@ -345,10 +275,7 @@ def compact_index(
             .select("field", "term", "mgrp", "n", "docs", "tfs", "dls", "poss")
             .mapInPandas(merge_partition, schema=POSTINGS_SCHEMA)
         )
-    merged = merged.withColumn(
-        "bucket",
-        F.pmod(F.crc32(F.encode("term", "utf-8")), F.lit(n_buckets)).cast("int"),
-    )
+    merged = merged.withColumn("bucket", bucket_col("term", n_buckets))
 
     os.makedirs(out_dir, exist_ok=True)
     # a record left by an earlier compaction into out_dir would describe
@@ -357,9 +284,9 @@ def compact_index(
         os.remove(os.path.join(out_dir, "meta.json"))
     (
         merged.repartition("bucket")
-        .sortWithinPartitions("term")
+        .sortWithinPartitions(*POSTINGS_ORDER)
         .write.mode("overwrite")
-        .partitionBy("seg", "field", "bucket")
+        .partitionBy(*POSTINGS_PARTS)
         .parquet(f"{out_dir}/postings")
     )
 
@@ -374,20 +301,7 @@ def compact_index(
     # republish global stats from the compacted postings (df shrinks when
     # tombstoned docs are dropped; N/avgdl from the surviving doc_stats)
     post_out = spark.read.parquet(f"{out_dir}/postings")
-    (
-        post_out.groupBy("field", "term")
-        .agg(F.sum("n").alias("df"))
-        .withColumn("tlen", F.length("term"))
-        .withColumn(
-            "bucket",
-            F.pmod(F.crc32(F.encode("term", "utf-8")), F.lit(n_buckets)).cast("int"),
-        )
-        .repartition("bucket")
-        .sortWithinPartitions("term")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(f"{out_dir}/term_dict")
-    )
+    publish_term_dict(post_out, out_dir, n_buckets)
     corpus = corpus_counters(
         spark.read.parquet(f"{out_dir}/doc_stats"), len(meta["fields"])
     )

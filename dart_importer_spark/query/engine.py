@@ -914,13 +914,11 @@ class InvertedIndex:
         (import_dart_data.py:229, test.py:62-70). The first key column
         determines the segment (crc32 % n_segments), so the scan prunes to
         one seg=... directory instead of touching every segment."""
-        import zlib
-
         key_cols = self.meta.get("doc_key_cols", ["conv_id", "turn_idx"])
         ds = self.doc_stats()
         n_segments = int(self.meta.get("n_segments", 0))
         if n_segments and "seg" in ds.columns:  # compaction preserves seg dirs
-            seg = zlib.crc32(str(key_values[0]).encode("utf-8")) % n_segments
+            seg = bucket_of(str(key_values[0]), n_segments)
             ds = ds.filter(F.col("seg") == seg)
         for col, val in zip(key_cols, key_values):
             ds = ds.filter(F.col(col) == val)
@@ -934,8 +932,6 @@ class InvertedIndex:
         reference's per-id GETs, import_dart_data.py:229). One scan, pruned
         to the union of the keys' segments, semi-joined on a broadcast of
         the (small, by definition) key list."""
-        import zlib
-
         key_cols = self.meta.get("doc_key_cols", ["conv_id", "turn_idx"])
         ds = self.doc_stats()
         keys = [tuple(k) for k in keys]
@@ -955,9 +951,7 @@ class InvertedIndex:
             )
         n_segments = int(self.meta.get("n_segments", 0))
         if n_segments and "seg" in ds.columns:
-            segs = sorted(
-                {zlib.crc32(str(k[0]).encode("utf-8")) % n_segments for k in keys}
-            )
+            segs = sorted({bucket_of(str(k[0]), n_segments) for k in keys})
             ds = ds.filter(F.col("seg").isin(segs))
         kdf = local_df(self.spark, keys, list(key_cols[:arity]))
         return ds.join(F.broadcast(kdf), list(kdf.columns), "left_semi")

@@ -14,7 +14,12 @@ from dart_importer_spark.functions.codec import (
     varbyte_decode,
     varbyte_encode,
 )
-from dart_importer_spark.index.build import BLOCK_SIZE, pack_runs_bulk
+from dart_importer_spark.index.build import (
+    BLOCK_SIZE,
+    bucket_col,
+    bucket_of,
+    pack_runs_bulk,
+)
 
 
 def test_varbyte_empty():
@@ -74,7 +79,7 @@ def _run_batches(draw):
     )
     with_pos = draw(st.booleans())
     rng = np.random.default_rng(draw(st.integers(0, 2**32 - 1)))
-    docs, poss = [], []
+    docs = []
     for size in sizes:
         gaps = rng.integers(1, 2**20, size)
         gaps[0] = rng.integers(0, 2**40)
@@ -84,10 +89,11 @@ def _run_batches(draw):
     dls = rng.integers(1, 1 << int(rng.integers(4, 32)), docs.size)
     ends = np.cumsum(sizes)
     starts = ends - np.asarray(sizes)
-    fields = pack_runs_bulk(docs, tfs, dls, starts, ends)
-    for s, e in zip(starts, ends):
-        pos = rng.integers(0, 10_000, int(tfs[s:e].sum()))
-        poss.append(varbyte_encode(pos) if with_pos else b"")
+    pos = rng.integers(0, 10_000, int(tfs.sum())) if with_pos else None
+    got_starts, fields = pack_runs_bulk(
+        (np.repeat(np.arange(len(sizes)), sizes),), docs, tfs, dls, 1 << 17, pos
+    )
+    assert np.array_equal(got_starts, starts)
     runs = pd.DataFrame(
         {
             "term": terms,
@@ -95,7 +101,7 @@ def _run_batches(draw):
             "docs": fields["docs"],
             "tfs": fields["tfs"],
             "dls": fields["dls"],
-            "poss": poss,
+            "poss": fields["poss"],
             "block_max_tf": [np.asarray(b) for b in fields["block_max_tf"]],
             "block_min_dl": [np.asarray(b) for b in fields["block_min_dl"]],
         }
@@ -158,9 +164,9 @@ def test_decode_masked_equals_per_run_masks(batch, seed):
 
 
 def test_decode_runs_rejects_a_count_mismatch():
-    fields = pack_runs_bulk(
-        np.array([3, 9]), np.array([1, 2]), np.array([4, 4]),
-        np.array([0]), np.array([2]),
+    _, fields = pack_runs_bulk(
+        (np.zeros(2),), np.array([3, 9]), np.array([1, 2]), np.array([4, 4]),
+        1 << 17,
     )
     runs = pd.DataFrame({"n": [3], "docs": fields["docs"]})
     with pytest.raises(ValueError, match="docs"):
@@ -197,3 +203,78 @@ def test_block_skipping_equals_per_run_blocks(batch, pick):
     ]
     assert want_runs and list(kept.index) == want_runs
     assert np.array_equal(keep, np.concatenate(want_keep))
+
+
+@st.composite
+def _posting_groups(draw):
+    """Postings sorted by group under two keys (term, field), ascending
+    doc_ids within a group, some groups longer than ``target_run``, and
+    positions either for every posting or none. Returns (keys, docs, tfs,
+    dls, poss | None, target_run, group sizes)."""
+    target_run = draw(st.integers(1, 2 * BLOCK_SIZE))
+    sizes = draw(st.lists(st.integers(1, 3 * BLOCK_SIZE), min_size=1, max_size=6))
+    rng = np.random.default_rng(draw(st.integers(0, 2**32 - 1)))
+    # distinct consecutive (term, field) pairs: one group each
+    pairs = [("t%02d" % (i // 2), i % 2) for i in range(len(sizes))]
+    terms = np.repeat(np.array([t for t, _ in pairs], dtype=object), sizes)
+    fields = np.repeat(np.array([f for _, f in pairs]), sizes)
+    docs = np.concatenate([np.cumsum(rng.integers(1, 2**20, n)) for n in sizes])
+    tfs = rng.integers(1, 6, docs.size)
+    dls = rng.integers(1, 2**33, docs.size)
+    poss = rng.integers(0, 2**20, int(tfs.sum())) if draw(st.booleans()) else None
+    return (terms, fields), docs, tfs, dls, poss, target_run, sizes
+
+
+@settings(max_examples=60, deadline=None)
+@given(_posting_groups())
+def test_pack_runs_bulk_round_trips_and_cuts_at_target_run(batch):
+    keys, docs, tfs, dls, poss, target_run, sizes = batch
+    starts, cols = pack_runs_bulk(keys, docs, tfs, dls, target_run, poss)
+    # each group is cut into ceil(size / target_run) runs of <= target_run
+    group_starts = np.cumsum(sizes) - sizes
+    want = np.concatenate([
+        np.arange(g, g + n, target_run) for g, n in zip(group_starts, sizes)
+    ])
+    assert np.array_equal(starts, want)
+    n = np.asarray(cols["n"])
+    assert n.max() <= target_run and n.sum() == docs.size
+    # decode gives back every posting and position, run by run
+    dec = decode_runs(pd.DataFrame(cols))
+    assert np.array_equal(dec["run"], np.repeat(np.arange(len(starts)), n))
+    assert np.array_equal(dec["doc_id"], docs)
+    assert np.array_equal(dec["tf"], tfs)
+    assert np.array_equal(dec["dl"], dls)
+    if poss is None:
+        assert set(cols["poss"]) == {b""} and dec["pos"].size == 0
+    else:
+        assert np.array_equal(dec["pos"], poss)
+    # per-run doc bounds and per-block metadata
+    for i, (s, k) in enumerate(zip(starts, n)):
+        assert cols["min_doc"][i] == docs[s] and cols["max_doc"][i] == docs[s + k - 1]
+        blocks = range(s, s + k, BLOCK_SIZE)
+        ends = [min(b + BLOCK_SIZE, s + k) for b in blocks]
+        assert cols["block_first"][i] == [docs[b] for b in blocks]
+        assert cols["block_max_tf"][i] == [tfs[b:e].max() for b, e in zip(blocks, ends)]
+        assert cols["block_min_dl"][i] == [
+            min(dls[b:e].min(), 2**31 - 1) for b, e in zip(blocks, ends)
+        ]
+
+
+def test_pack_runs_bulk_writes_empty_blobs_without_positions():
+    args = ((np.array([0, 0, 1]),), np.array([2, 5, 1]), np.array([1, 3, 2]),
+            np.array([7, 8, 9]), 1 << 17)
+    for poss in (None, np.empty(0, dtype=np.int64)):
+        _, cols = pack_runs_bulk(*args, poss)
+        assert cols["poss"] == [b"", b""]
+
+
+def test_bucket_of_agrees_with_bucket_col(spark):
+    terms = [
+        "data", "merge_2", "0", "x" * 40,  # ASCII
+        "삼성", "전자", "一二三", "ㄱ",  # CJK
+        "삼성\x1f전자", "the\x1fand", "a\x1fb\x1fc",  # shingles
+    ]
+    df = spark.createDataFrame([(t,) for t in terms], "term string")
+    for n in (1, 4, 7, 16):
+        got = [r[0] for r in df.select(bucket_col("term", n)).collect()]
+        assert got == [bucket_of(t, n) for t in terms], n

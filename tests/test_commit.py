@@ -4,7 +4,8 @@ layout, the corpus counters and the lineage of an index.
 Kill points: the commit writer raises once (monkeypatched, no process
 kill), after every data write of a build, an append or a compaction. The
 previous record must keep the index readable and the next run must repair
-it. Also pinned: an open runs no Spark job, an append's job count, an
+it. Also pinned: an open runs no Spark job, the job counts of a build, an
+append and a compaction, term-sorted postings and term_dict files, an
 append keeps the first build's ``created_ts`` (rollover age), and an index
 of another ``format_version`` is refused with ``IndexFormatError``.
 """
@@ -15,6 +16,7 @@ import json
 import os
 import shutil
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -33,8 +35,11 @@ from tests.oracle import BM25Oracle
 CFG = BuildConfig(n_segments=2, n_buckets=4)
 SPLIT = "conv00000040"
 QUERY = "the and data"
-# jobs of one append_index of 20 conversations onto a 2-segment index
-APPEND_JOBS_MAX = 26
+# jobs of one build_index of 40 conversations into 2 segments, of one
+# append_index of 20 conversations onto it, and of compacting the result
+BUILD_JOBS_MAX = 24
+APPEND_JOBS_MAX = 23
+COMPACT_JOBS_MAX = 24
 
 
 class KillPoint(RuntimeError):
@@ -90,11 +95,18 @@ def tx(spark):
 
 
 @pytest.fixture(scope="module")
-def base_dir(spark, tx, tmp_path_factory):
-    """An index of the first 40 conversations."""
+def base_build(spark, tx, tmp_path_factory):
+    """An index of the first 40 conversations, built under a job group."""
     out = str(tmp_path_factory.mktemp("commit") / "base")
-    build_index(spark, tx.filter(F.col("conv_id") < SPLIT), out, CFG)
-    return out
+    _res, jobs = jobs_of(spark, "build-pin", lambda: build_index(
+        spark, tx.filter(F.col("conv_id") < SPLIT), out, CFG
+    ))
+    return out, jobs
+
+
+@pytest.fixture(scope="module")
+def base_dir(base_build):
+    return base_build[0]
 
 
 @pytest.fixture(scope="module")
@@ -119,6 +131,40 @@ def appended(spark, tx, base_dir, tmp_path_factory):
     return out, meta["created_ts"], res, jobs
 
 
+@pytest.fixture(scope="module")
+def compacted(spark, appended, tmp_path_factory):
+    """``appended`` compacted under a job group."""
+    out = str(tmp_path_factory.mktemp("commit") / "compacted")
+    _res, jobs = jobs_of(spark, "compact-pin", lambda: compact_index(
+        spark, appended[0], out
+    ))
+    return out, jobs
+
+
+def test_build_and_compact_job_counts_are_pinned(spark, base_build, compacted, oracle):
+    assert 0 < len(base_build[1]) <= BUILD_JOBS_MAX, len(base_build[1])
+    out, jobs = compacted
+    assert 0 < len(jobs) <= COMPACT_JOBS_MAX, len(jobs)
+    assert_is_full_index(InvertedIndex(spark, out), oracle)
+
+
+def test_postings_and_term_dict_files_are_term_sorted(base_dir, appended, compacted):
+    """Every postings and term_dict file that a build, an append and a
+    compaction wrote holds its rows in term order, so parquet row-group
+    min/max stats on ``term`` can skip row groups."""
+    n_files = 0
+    for idx in (base_dir, appended[0], compacted[0]):
+        assert "term_seg_df" not in os.listdir(idx)
+        for table in ("postings", "term_dict"):
+            for root, _dirs, files in os.walk(os.path.join(idx, table)):
+                for f in (f for f in files if f.endswith(".parquet")):
+                    path = os.path.join(root, f)
+                    terms = pq.read_table(path, columns=["term"])["term"].to_pylist()
+                    assert terms == sorted(terms), path
+                    n_files += 1
+    assert n_files > 20
+
+
 def test_open_runs_no_spark_job(spark, base_dir):
     ix, jobs = jobs_of(spark, "open-pin", lambda: InvertedIndex(spark, base_dir))
     assert jobs == []
@@ -131,7 +177,7 @@ def test_append_commits_once_with_pinned_job_count(spark, tx, appended, oracle):
     assert read_meta(out)["lineage"]["append-t1"]["status"] == "committed"
     assert res["n_docs"] == oracle.n_docs
     assert_is_full_index(InvertedIndex(spark, out), oracle)
-    assert not {"manifests", "corpus_stats"} & set(os.listdir(out))
+    assert not {"manifests", "corpus_stats", "term_seg_df"} & set(os.listdir(out))
     # the append's doc_stats files are clustered by seg like a build's
     for seg in ("seg=0", "seg=1"):
         files = [f for f in os.listdir(os.path.join(out, "doc_stats", seg))

@@ -159,6 +159,14 @@ def test_dsl_suggest_section(comp_index):
         suggest(comp_index, {"query": {"match_all": {}}})
 
 
+def test_search_suggest_runs_a_term_suggester(comp_index):
+    out = comp_index.search_suggest({"suggest": {
+        "fix": {"text": "alpah", "term": {"field": "text", "size": 3}},
+    }})
+    assert list(out) == ["fix"]
+    assert out["fix"].collect()[0]["term"] == "alpha"
+
+
 def test_dsl_suggest_global_text_and_fuzzy_options(comp_index):
     from dart_importer_spark.query.dsl import DslError, suggest
 
