@@ -62,7 +62,7 @@ def _documents_index(spark: SparkSession, sf_dir: str):
         # format-versioned cache dir: a stale index from an older on-disk
         # layout must never be resumed into
         out = os.path.join(
-            "/tmp/dis_entry_index_v9", key.strip("/").replace("/", "_")
+            "/tmp/dis_entry_index_v10", key.strip("/").replace("/", "_")
         )
         docs = _load(spark, sf_dir, "documents").withColumnRenamed("doc_id", "src_id")
         # opt_tag: a deterministically-nullable column so ES `exists`
@@ -937,7 +937,7 @@ def _documents_split_indexes(spark: SparkSession, sf_dir: str):
     key = os.path.abspath(sf_dir)
     if key not in _MULTI_CACHE:
         base = os.path.join(
-            "/tmp/dis_entry_multi_v3", key.strip("/").replace("/", "_")
+            "/tmp/dis_entry_multi_v4", key.strip("/").replace("/", "_")
         )
         docs = _load(spark, sf_dir, "documents").withColumnRenamed(
             "doc_id", "src_id"

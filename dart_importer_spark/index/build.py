@@ -12,8 +12,11 @@ replacement. Layout on disk (parquet; Iceberg-compatible table shapes):
                          pruning; every run is written by ``pack_runs_bulk``
     <out>/doc_stats/     seg=<s>/   (doc_id, conv_id, turn_idx, role, tool,
                          ts, dl) — metadata filters + length norms
-    <out>/term_dict/     bucket=<b>/  (field, term, df, tlen) — global,
-                         df = sum of the postings' run counts
+    <out>/term_dict/     bucket=<b>/  (field, term, df, max_tf, min_dl,
+                         tlen) — global, df = sum of the postings' run
+                         counts, max_tf / min_dl = the term's block-max
+                         bound inputs; the only source of per-term
+                         statistics for queries and compaction
     <out>/meta.json      the commit record (``index.commit``): layout config,
                          per-field corpus counters (n_docs, avgdl,
                          total_tokens) and per-segment lineage (FIXTURES.md
@@ -888,18 +891,25 @@ def _build_segments(
 
 
 def publish_term_dict(postings: DataFrame, out_dir: str, n_buckets: int) -> None:
-    """Derive the global (field, term, df) dictionary from ``postings``,
-    the read of ``out_dir``'s postings table (callers share the read with
-    their own run counts): df is the sum of ``n`` over a term's runs (a document holds a term
-    once per field, and runs never share a posting). The one writer of
-    term_dict, for build, resume, append and compaction. term_dict is
-    directory-partitioned by the same crc32 term bucket as the postings,
-    so a query's df lookup prunes to the buckets its terms hash to instead
-    of scanning the whole dictionary; files are term-sorted (see
-    ``POSTINGS_ORDER``)."""
+    """Derive the global per-term statistics from ``postings``, the read of
+    ``out_dir``'s postings table (callers share the read with their own
+    run counts), one row per (field, term): ``df`` is the sum of ``n`` over
+    the term's runs (a document holds a term once per field, and runs
+    never share a posting); ``max_tf`` and ``min_dl`` are the largest
+    block max tf and the smallest block min dl over those runs, the
+    inputs of the term's block-max upper bound idf·tfn(max_tf, min_dl).
+    The one writer of term_dict, for build, resume, append and
+    compaction. term_dict is directory-partitioned by the same crc32 term
+    bucket as the postings, so a df lookup reads only the buckets its
+    terms hash to (``InvertedIndex._legs_stats``); files are term-sorted
+    (see ``POSTINGS_ORDER``)."""
     (
         postings.groupBy("field", "term")
-        .agg(F.sum("n").alias("df"))
+        .agg(
+            F.sum("n").alias("df"),
+            F.max(F.array_max("block_max_tf")).alias("max_tf"),
+            F.min(F.array_min("block_min_dl")).alias("min_dl"),
+        )
         # tlen feeds the fuzzy-expansion length-band pushdown
         .withColumn("tlen", F.length("term"))
         .withColumn("bucket", bucket_col("term", n_buckets))

@@ -21,7 +21,7 @@ import json
 import os
 import time
 
-FORMAT_VERSION = 1
+FORMAT_VERSION = 2
 
 
 class IndexFormatError(Exception):

@@ -173,8 +173,11 @@ def compact_index(
     ).collect()[0]
     n_for_range = int(n_docs_row["mx"] or 0) + 1
 
-    # per-term total df decides how many merge ranges the term needs
-    totals = post.groupBy("field", "term").agg(F.sum("n").alias("df_total"))
+    # per-term total df (the input's term_dict) decides how many merge
+    # ranges the term needs
+    totals = spark.read.parquet(f"{index_dir}/term_dict").select(
+        "field", "term", F.col("df").alias("df_total")
+    )
     ranged = post.join(totals, ["field", "term"]).withColumn(
         "nmerge", F.ceil(F.col("df_total") / F.lit(target_run)).cast("long")
     ).withColumn(

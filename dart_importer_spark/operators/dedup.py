@@ -680,10 +680,8 @@ def dedup_clusters(
     # one task per stage at toy scale, thousands of tasks at 10^12 edges.
     # Every round otherwise launches 32+ near-empty map tasks per join
     # stage, and the per-stage scheduling overhead dominates the round.
-    import os as _os
-
     n_edges = edges.count()
-    rows_per_task = int(_os.environ.get("DIS_CC_ROWS_PER_TASK", "65536"))
+    rows_per_task = 65536
     # SHRINK-only, and only for genuinely tiny graphs (one join task per
     # ~64k edges): below that, per-task scheduling overhead dominates each
     # propagation round; above it the inherited parallelism stands — the

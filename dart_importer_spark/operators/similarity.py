@@ -746,9 +746,7 @@ class IvfAnnIndex:
         # pyspark.ml distributed fit takes over unchanged — quantizer
         # TRAINING is bounded work, quantizer ASSIGNMENT below stays a
         # single distributed Arrow pass either way.
-        driver_rows_cap = int(
-            os.environ.get("DIS_IVF_DRIVER_FIT_MAX_ROWS", "200000")
-        )
+        driver_rows_cap = 200_000
         est_train_rows = (
             n if self.train_fraction >= 1.0
             else int(math.ceil(n * self.train_fraction))

@@ -40,6 +40,7 @@ from typing import Any, Callable, Iterator, Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow.parquet as pq
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -245,9 +246,7 @@ class InvertedIndex:
         # cheaper than the job itself, so the bootstrap is skipped (θ=0 —
         # pruned ≡ exhaustive, so results are unchanged either way). The
         # default is scale-adaptive by construction: big corpora exceed it.
-        self.prune_min_postings = int(
-            os.environ.get("DIS_PRUNE_MIN_POSTINGS", "65536")
-        )
+        self.prune_min_postings = 65536
         # lazy DataFrame handles for the immutable segment tables: reusing
         # the resolved reader skips re-listing the table's files and
         # re-reading parquet footers on every query against this handle
@@ -438,13 +437,8 @@ class InvertedIndex:
         )
 
     def term_stats(self, terms: Sequence[str], field=None) -> dict[str, int]:
-        buckets = sorted({bucket_of(t, self.n_buckets) for t in terms})
-        rows = (
-            self._field_dict(field)
-            .filter(F.col("bucket").isin(buckets) & F.col("term").isin(list(terms)))
-            .collect()
-        )
-        return {r["term"]: int(r["df"]) for r in rows}
+        """``{term: df}`` for the ``terms`` present in ``field``."""
+        return self._legs_stats([(self._fid(field), list(terms))])[0][0]
 
     # ------------------------------------------------------- match / BM25 topk
     def topk(
@@ -528,48 +522,31 @@ class InvertedIndex:
         terms = sorted(set(self._analyze(query, field)))
         if not terms:
             return self._empty_scored(with_meta)
-        # one job over the bucket-pruned candidate postings yields df
-        # (= sum of run lengths) AND the per-term block-max upper bounds —
-        # instead of a term_dict scan plus a second bounds pass
-        stat_rows = (
-            self._candidate_postings(terms, fid)
-            .groupBy("term")
-            .agg(
-                F.sum("n").alias("df"),
-                F.max(F.array_max("block_max_tf")).alias("mtf"),
-                F.min(F.array_min("block_min_dl")).alias("mdl"),
-            )
-            .collect()
-        )
-        dfs = {r["term"]: int(r["df"]) for r in stat_rows}
+        # dfs_query_then_fetch: ``dfs_stats`` scores with the caller's
+        # GLOBAL statistics (cross-index df / doc count / avgdl) instead of
+        # this index's local ones. Pruning bounds (ubs, θ) derive from the
+        # same overridden idf/avgdl, so pruned ≡ exhaustive is preserved
+        # under the override.
+        [(dfs, idf, ubs)] = self._legs_stats([(fid, terms)], dfs_stats)
         terms = [t for t in terms if t in dfs]
         if not terms:
             return self._empty_scored(with_meta)
         if dfs_stats is not None:
-            # dfs_query_then_fetch: score with the caller's GLOBAL
-            # statistics (cross-index df / doc count / avgdl) instead of
-            # this index's local ones. Pruning bounds (ubs, θ) derive
-            # from the same overridden idf/avgdl below, so pruned ≡
-            # exhaustive is preserved under the override.
             avgdl = float(dfs_stats.get("avgdl", avgdl))
-            g_df = dfs_stats.get("df") or {}
-            g_n = int(dfs_stats.get("n_docs", self.n_docs))
-            idf = {t: _idf(g_n, int(g_df.get(t, dfs[t]))) for t in terms}
-        else:
-            idf = {t: _idf(self.n_docs, dfs[t]) for t in terms}
+        # the bounds are idf-proportional (ub = idf·tfn(max_tf, min_dl)), so
+        # they scale with every weight that multiplies or replaces idf
         if boosts:
             idf = {t: w * float(boosts.get(t, 1.0)) for t, w in idf.items()}
+            ubs = {t: u * float(boosts.get(t, 1.0)) for t, u in ubs.items()}
         if term_weights is not None:
-            idf = {t: float(term_weights[t]) for t in terms if t in term_weights}
+            ubs = {
+                t: ubs[t] / idf[t] * float(term_weights[t])
+                for t in terms if t in term_weights
+            }
+            idf = {t: float(term_weights[t]) for t in ubs}
             terms = [t for t in terms if t in idf]
             if not terms:
                 return self._empty_scored(with_meta)
-        ubs = {
-            r["term"]: idf[r["term"]]
-            * _tfn(float(r["mtf"]), float(r["mdl"]), avgdl)
-            for r in stat_rows
-            if r["term"] in idf
-        }
 
         # --- doc-id masks, pushed below scoring when they fit the budget ---
         # ES applies bool filters (and deletes) BEFORE scoring; masking doc
@@ -605,9 +582,9 @@ class InvertedIndex:
             prune and should is None and mode == "or" and len(terms) > 1
             and msm <= 1 and search_after is None
         ):
-            theta = self._threshold_estimate(
-                terms, dfs, idf, need, dead_ids, allowed_ids, allowed_df,
-                fid=fid, avgdl=avgdl, dead_df=dead_df,
+            theta = self._theta(
+                [(fid, terms, dfs, idf, ubs)], need, dead_ids, allowed_ids,
+                dead_df=dead_df, allowed_df=allowed_df, avgdl=avgdl,
             )
         # ES _profile-style plan record: which physical strategy actually ran
         # (operators can't see the budget fallback from results alone)
@@ -695,34 +672,44 @@ class InvertedIndex:
             return shingle_text(query, int(m.group(1)))
         return tokenize_text(query)
 
-    def _threshold_estimate(
-        self, terms, dfs, idf, need, dead_ids, allowed_ids, allowed_df,
-        fid: int = 0, avgdl: float | None = None,
-        dead_df: DataFrame | None = None,
+    def _theta(
+        self, legs: list[tuple], need: int,
+        dead: np.ndarray | None = None, allowed: np.ndarray | None = None,
+        dead_df: DataFrame | None = None, allowed_df: DataFrame | None = None,
+        avgdl: float | None = None,
     ) -> float:
-        """Lower bound θ on the final ``need``-th score, computed
-        DISTRIBUTEDLY: fully score the rarest term (fewest postings) through
-        the same masked kernel, take its need-th best single-term
+        """Lower bound θ on the final ``need``-th score (WAND's threshold
+        bootstrap), computed DISTRIBUTEDLY: fully score the globally rarest
+        (field, term) of ``legs`` = [(fid, terms, dfs, idf, ubs), ...]
+        through the same masked kernel and take its need-th best single-term
         contribution via orderBy/limit — at most ``need`` rows ever reach
-        the driver, postings never do. Masks keep θ valid: a tombstoned or
-        filtered-out doc must not inflate θ above the true need-th live
-        score (which would prune blocks holding real top-k docs)."""
+        the driver, postings never do. A per-doc partial never exceeds the
+        doc's total, so it lower-bounds the need-th best total. ``dead`` /
+        ``allowed`` are the caller's pushed id masks; ids it could not push
+        are joined away from ``dead_df`` (default: the tombstones) and
+        ``allowed_df``, so a tombstoned or filtered-out doc never inflates θ
+        above the true need-th live score (which would prune blocks holding
+        real top-k docs). ``avgdl`` overrides the field's (``dfs_stats``)."""
+        cands = [
+            (dfs[t], fid, t, idf[t])
+            for fid, terms, dfs, idf, _ in legs
+            for t in terms
+        ]
         # tiny candidate sets: the bootstrap job costs more than the decode
         # work it could skip — exhaustive scoring (θ=0) is rank-identical
-        if sum(dfs[t] for t in terms) < self.prune_min_postings:
+        if not cands or sum(c[0] for c in cands) < self.prune_min_postings:
             return 0.0
-        rarest = min(terms, key=lambda t: dfs[t])
-        if dfs[rarest] < need:
+        d, fid, t, w = min(cands, key=lambda c: c[0])
+        if d < need:
             return 0.0
         scored = self._score_terms(
-            [rarest], {rarest: idf[rarest]}, dead=dead_ids, allowed=allowed_ids,
-            fid=fid, avgdl=avgdl,
+            [t], {t: w}, dead=dead, allowed=allowed, fid=fid, avgdl=avgdl,
         )
-        if dead_ids is None:
+        if dead is None:
             drop = dead_df if dead_df is not None else self._tombstones()
             if drop is not None:
                 scored = scored.join(drop.select("doc_id"), "doc_id", "left_anti")
-        if allowed_df is not None and allowed_ids is None:
+        if allowed_df is not None and allowed is None:
             scored = scored.join(allowed_df, "doc_id", "left_semi")
         rows = scored.select("score").orderBy(F.desc("score")).limit(need).collect()
         if len(rows) < need:
@@ -845,11 +832,11 @@ class InvertedIndex:
     ) -> tuple[dict[str, int], int, float]:
         """The DFS phase of ES ``dfs_query_then_fetch``: this index's
         ``({term: df}, n_docs, avgdl)`` for the analyzed query — one
-        bucket-pruned term-dictionary lookup (df is a dictionary column;
-        no postings touched), O(#query terms) rows to the caller —
-        exactly the payload of ES's DFS round-trip. n_docs and avgdl
-        follow the engine's Lucene convention (stale under deletes until
-        compaction)."""
+        driver-side read of the term_dict buckets the terms hash to
+        (:meth:`_legs_stats`: no Spark job, no postings touched),
+        O(#query terms) rows to the caller — exactly the payload of ES's
+        DFS round-trip. n_docs and avgdl follow the engine's Lucene
+        convention (stale under deletes until compaction)."""
         avgdl = self.avgdl_by_field[self._fid(field)]
         terms = sorted(set(self._analyze(query, field)))
         if not terms:
@@ -1595,7 +1582,7 @@ class InvertedIndex:
         if not exp2src:
             return empty
         all_exp = sorted(exp2src)
-        dfs, _idf_unused, _ubs = self._leg_stats(all_exp, fid)
+        dfs = self.term_stats(all_exp, fid)
         all_exp = [e for e in all_exp if e in dfs]
         if not all_exp:
             return empty
@@ -1787,115 +1774,67 @@ class InvertedIndex:
         terms = sorted(set(terms))
         if not terms:
             return None
-        dfs = self.term_stats(terms, fid)
-        terms = [t for t in terms if t in dfs]
+        [(_dfs, idf, _ubs)] = self._legs_stats([(fid, terms)])
+        terms = [t for t in terms if t in idf]
         if not terms:
             return None
-        idf = {t: _idf(self.n_docs, dfs[t]) for t in terms}
         if boosts:
             idf = {t: w * float(boosts.get(t, 1.0)) for t, w in idf.items()}
         scored = self._score_terms(terms, idf, fid=fid)
         return scored.groupBy("doc_id").agg(F.sum("score").alias("score"))
 
-    def _leg_stats(
-        self, terms: list[str], fid: int
-    ) -> tuple[dict, dict, dict]:
-        """One bucket-pruned metadata job per scoring leg: per-term df,
-        idf, and block-max upper bound (same combined pass topk uses)."""
-        avgdl = self.avgdl_by_field[fid]
-        rows = (
-            self._candidate_postings(terms, fid)
-            .groupBy("term")
-            .agg(
-                F.sum("n").alias("df"),
-                F.max(F.array_max("block_max_tf")).alias("mtf"),
-                F.min(F.array_min("block_min_dl")).alias("mdl"),
-            )
-            .collect()
-        )
-        dfs = {r["term"]: int(r["df"]) for r in rows}
-        idf = {t: _idf(self.n_docs, d) for t, d in dfs.items()}
-        ubs = {
-            r["term"]: idf[r["term"]]
-            * _tfn(float(r["mtf"]), float(r["mdl"]), avgdl)
-            for r in rows
-        }
-        return dfs, idf, ubs
-
     def _legs_stats(
-        self, specs: list[tuple[int, list[str]]]
+        self,
+        specs: list[tuple[int, list[str]]],
+        dfs_stats: dict | None = None,
     ) -> list[tuple[dict, dict, dict]]:
-        """Batched :meth:`_leg_stats`: ONE bucket-pruned metadata job for
-        ALL scoring legs (multi_match / search_as_you_type run one leg per
-        field — a per-leg collect is a per-field driver round trip). The
-        scan filter is the union over legs of (field, bucket, term); rows a
-        leg did not request are dropped when its dicts are built, so the
-        per-leg stats are identical to the per-leg job's."""
+        """The one reader of per-term statistics. For each scoring leg
+        ``(fid, terms)`` of ``specs``: ``({term: df}, {term: idf},
+        {term: ub})`` over the leg's terms present in the field, where
+        ub = idf·tfn(max_tf, min_dl, avgdl) is the term's block-max upper
+        bound. pyarrow reads term_dict on the driver — only the
+        ``bucket=<b>`` directories the terms hash to, filtered on field and
+        term — so no Spark job runs and no postings are touched.
+        ``dfs_stats`` (see :meth:`topk`) overrides df, n_docs and avgdl in
+        idf and the bounds; df stays this index's."""
+        table = os.path.join(self.dir, "term_dict")
+        if not os.path.isdir(table):
+            raise FileNotFoundError(f"no term_dict in index {self.dir!r}")
         specs = [(int(fid), list(terms)) for fid, terms in specs]
-        all_terms = sorted({t for _, ts in specs for t in ts})
+        by_bucket: dict[int, set[str]] = {}
+        for _, terms in specs:
+            for t in terms:
+                by_bucket.setdefault(bucket_of(t, self.n_buckets), set()).add(t)
         fids = sorted({fid for fid, _ in specs})
-        if not all_terms:
-            return [({}, {}, {}) for _ in specs]
-        buckets = sorted({bucket_of(t, self.n_buckets) for t in all_terms})
-        rows = (
-            self.postings()
-            .filter(
-                F.col("field").isin(fids)
-                & F.col("bucket").isin(buckets)
-                & F.col("term").isin(all_terms)
-            )
-            .groupBy("field", "term")
-            .agg(
-                F.sum("n").alias("df"),
-                F.max(F.array_max("block_max_tf")).alias("mtf"),
-                F.min(F.array_min("block_min_dl")).alias("mdl"),
-            )
-            .collect()
-        )
-        by_key = {(int(r["field"]), r["term"]): r for r in rows}
+        rows: dict[tuple[int, str], tuple[int, int, int]] = {}
+        for b, ts in sorted(by_bucket.items()):
+            path = os.path.join(table, f"bucket={b}")
+            if not os.path.isdir(path):
+                continue  # no term of the index hashes to this bucket
+            got = pq.read_table(
+                path,
+                columns=["field", "term", "df", "max_tf", "min_dl"],
+                filters=[("field", "in", fids), ("term", "in", sorted(ts))],
+            ).to_pydict()
+            for f, t, d, mtf, mdl in zip(*got.values()):
+                rows[(f, t)] = (d, mtf, mdl)
+        over = dfs_stats or {}
+        g_df = over.get("df") or {}
+        n_docs = int(over.get("n_docs", self.n_docs))
         out = []
         for fid, terms in specs:
-            avgdl = self.avgdl_by_field[fid]
+            avgdl = float(over.get("avgdl", self.avgdl_by_field[fid]))
             dfs: dict = {}
             idf: dict = {}
             ubs: dict = {}
             for t in terms:
-                r = by_key.get((fid, t))
-                if r is None:
+                if (fid, t) not in rows:
                     continue
-                dfs[t] = int(r["df"])
-                idf[t] = _idf(self.n_docs, dfs[t])
-                ubs[t] = idf[t] * _tfn(float(r["mtf"]), float(r["mdl"]), avgdl)
+                dfs[t], mtf, mdl = rows[(fid, t)]
+                idf[t] = _idf(n_docs, int(g_df.get(t, dfs[t])))
+                ubs[t] = idf[t] * _tfn(float(mtf), float(mdl), avgdl)
             out.append((dfs, idf, ubs))
         return out
-
-    def _multi_leg_theta(self, legs: list[tuple], need: int) -> float:
-        """θ bootstrap across scoring legs (WAND's lower bound on the
-        need-th best TOTAL score): fully score the globally rarest
-        (field, term) leg through the masked kernel and take its need-th
-        best single-leg contribution — a per-doc partial never exceeds the
-        doc's total, so the need-th best partial lower-bounds the need-th
-        best total. legs = [(fid, terms, dfs, idf, ubs), ...]."""
-        best = None
-        total_postings = 0
-        for fid, terms, dfs, idf, _ in legs:
-            for t in terms:
-                total_postings += dfs[t]
-                if best is None or dfs[t] < best[2]:
-                    best = (fid, t, dfs[t], idf[t])
-        if best is None:
-            return 0.0
-        # tiny candidate sets: skip the bootstrap job (θ=0 ≡ exhaustive)
-        if total_postings < self.prune_min_postings:
-            return 0.0
-        fid, t, d, w = best
-        if d < need:
-            return 0.0
-        scored = self._live(self._score_terms([t], {t: w}, fid=fid))
-        rows = scored.select("score").orderBy(F.desc("score")).limit(need).collect()
-        if len(rows) < need:
-            return 0.0
-        return float(rows[-1]["score"])
 
     def _positions_for_terms(
         self, terms: list[str], fid: int, allowed=None
@@ -1929,30 +1868,24 @@ class InvertedIndex:
 
     def _phrase_candidate_ids(
         self, terms: list[str], fid: int
-    ) -> tuple[np.ndarray | None, bool, dict[str, int]]:
-        """Rarest-first bootstrap for match_phrase: per-term df from one
-        bucket-pruned metadata scan, then the rarest term's doc_ids as the
+    ) -> tuple[np.ndarray | None, bool, dict[str, float]]:
+        """Rarest-first bootstrap for match_phrase: per-term df from the
+        term-statistics reader, then the rarest term's doc_ids as the
         candidate mask (a phrase hit must contain EVERY term, so the rarest
         term's doc set bounds the result). Returns (sorted ids | None,
-        any_term_missing, per-term dfs): None ids means the rarest df
+        any_term_missing, per-term idf): None ids means the rarest df
         exceeded the push budget (stay distributed — decode everything,
-        joins intersect). The dfs ride along so scoring callers
-        (match_phrase_scored) don't pay a second metadata scan."""
+        joins intersect). The idfs ride along for the scoring callers
+        (match_phrase_scored)."""
         uniq = sorted(set(terms))
-        stat_rows = (
-            self._candidate_postings(uniq, fid)
-            .groupBy("term")
-            .agg(F.sum("n").alias("df"))
-            .collect()
-        )
-        dfs = {r["term"]: int(r["df"]) for r in stat_rows}
+        [(dfs, idf, _ubs)] = self._legs_stats([(fid, uniq)])
         if len(dfs) < len(uniq):
-            return None, True, dfs  # some phrase term absent -> no hits
+            return None, True, idf  # some phrase term absent -> no hits
         rarest = min(uniq, key=lambda t: dfs[t])
         if dfs[rarest] > self.id_push_budget:
-            return None, False, dfs
+            return None, False, idf
         ids = self._bounded_ids(self._docs_for_terms([rarest], fid))
-        return ids, False, dfs
+        return ids, False, idf
 
     def _bc_ids(self, ids):
         """Broadcast a sorted id mask ONCE for reuse across the per-term
@@ -2119,11 +2052,10 @@ class InvertedIndex:
         terms = self._analyze(query, fid)
         if not terms:
             return None
-        # ONE metadata scan: the bootstrap's dfs double as the idf source
-        cand_ids, missing, dfs = self._phrase_candidate_ids(terms, fid)
+        cand_ids, missing, idf = self._phrase_candidate_ids(terms, fid)
         if missing:
             return None
-        idf_sum = sum(_idf(self.n_docs, dfs[t]) for t in terms)
+        idf_sum = sum(idf[t] for t in terms)
         bc_cand = self._bc_ids(cand_ids)
         if slop == 0:
             starts = self._phrase_starts(terms, fid, bc_cand)
@@ -2166,7 +2098,7 @@ class InvertedIndex:
         if fid == 0:
             dl = self.doc_stats().select("doc_id", "dl")
         else:
-            rarest = min(set(terms), key=lambda t: dfs[t])
+            rarest = max(set(terms), key=lambda t: idf[t])  # fewest docs
             dl = self._dls_for_term(rarest, fid, allowed=bc_cand)
         joined = self._live(ptf).join(dl, "doc_id")
         score = (
@@ -2498,28 +2430,16 @@ class InvertedIndex:
         slot with the fewest total postings bounds the result), then the
         same n-1 position-band join chain as single-term span_near."""
         n = len(slots)
-        # per-fid metadata scan: total df per slot; any empty slot -> None
-        by_fid: dict[int, set[str]] = {}
-        for terms, fid in slots:
-            by_fid.setdefault(fid, set()).update(terms)
-        df_by: dict[tuple[int, str], int] = {}
-        for fid, ts in by_fid.items():
-            rows = (
-                self._candidate_postings(sorted(ts), fid)
-                .groupBy("term")
-                .agg(F.sum("n").alias("df"))
-                .collect()
-            )
-            for r in rows:
-                df_by[(fid, r["term"])] = int(r["df"])
+        # total df per slot; any empty slot -> None
         live_slots: list[tuple[list[str], int]] = []
         totals: list[int] = []
-        for terms, fid in slots:
-            live = [t for t in terms if df_by.get((fid, t))]
+        stats = self._legs_stats([(fid, terms) for terms, fid in slots])
+        for (terms, fid), (dfs, _idfs, _ubs) in zip(slots, stats):
+            live = [t for t in terms if dfs.get(t)]
             if not live:
                 return None
             live_slots.append((live, fid))
-            totals.append(sum(df_by[(fid, t)] for t in live))
+            totals.append(sum(dfs[t] for t in live))
         # rarest-slot bootstrap: its ANY-of-terms doc set masks every decode
         ri = min(range(n), key=totals.__getitem__)
         bc_cand = None
@@ -5735,7 +5655,7 @@ class InvertedIndex:
                 members.update(self._analyze(str(phrase), field))
             groups[tok] = sorted(members)
         all_terms = sorted({m for ms in groups.values() for m in ms})
-        dfs = self.term_stats(all_terms, field)
+        [(dfs, idf, _ubs)] = self._legs_stats([(fid, all_terms)])
         live_terms = [t for t in all_terms if t in dfs]
         if not live_terms:
             return local_df(self.spark, [], "doc_id long, score double")
@@ -5748,10 +5668,11 @@ class InvertedIndex:
                 ["term", "doc_id", "tf", "dl"],
             )
         )
+        # a group scores at its most frequent member's idf (the smallest)
         group_idf = {
-            g: _idf(self.n_docs, max(dfs.get(m, 0) for m in ms))
+            g: min(idf[m] for m in ms if m in idf)
             for g, ms in groups.items()
-            if any(m in dfs for m in ms)
+            if any(m in idf for m in ms)
         }
         mapping = [
             (m, g) for g, ms in groups.items() for m in ms if g in group_idf
@@ -7153,7 +7074,7 @@ class InvertedIndex:
         theta = 0.0
         n_terms_total = sum(len(l[1]) for l in legs)
         if prune and n_terms_total > 1 and operator == "or":
-            theta = self._multi_leg_theta(legs, k)
+            theta = self._theta(legs, k)
         ub_total = sum(sum(l[4].values()) for l in legs)
         term_centric = match_type == "cross_fields"
         parts: list[DataFrame] = []
@@ -7346,7 +7267,7 @@ class InvertedIndex:
                 legs.append((gid, lterms, dfs, idf, ubs))
         theta = 0.0
         if prune and legs and sum(len(l[1]) for l in legs) > 1:
-            theta = self._multi_leg_theta(legs, k)
+            theta = self._theta(legs, k)
         # the prefix leg's flat 1.0/doc rides every BM25 leg's slack
         ub_total = sum(sum(l[4].values()) for l in legs) + 1.0
         parts: list[DataFrame] = []
@@ -7648,13 +7569,12 @@ class InvertedIndex:
             )
         doc_id = int(rows[0]["doc_id"])
         terms = sorted(set(self._analyze(query, field)))
-        dfs = self.term_stats(terms, field)
+        [(dfs, idf, _ubs)] = self._legs_stats([(fid, terms)])
         present = [t for t in terms if t in dfs]
         if not present:
             return local_df(self.spark, 
                 [], "term string, df long, idf double, contribution double"
             )
-        idf = {t: _idf(self.n_docs, dfs[t]) for t in present}
         scored = self._score_terms(
             present, idf, fid=fid,
             allowed=np.array([doc_id], dtype=np.int64), keep_term=True,
@@ -7753,11 +7673,10 @@ class InvertedIndex:
         out_schema = "query_id string, doc_id long, score double"
         if not all_terms:
             return local_df(self.spark, [], out_schema)
-        dfs = self.term_stats(all_terms, field)
+        [(dfs, idf, _ubs)] = self._legs_stats([(fid, all_terms)])
         present = [t for t in all_terms if t in dfs]
         if not present:
             return local_df(self.spark, [], out_schema)
-        idf = {t: _idf(self.n_docs, dfs[t]) for t in present}
 
         # one decode+score pass over the union of terms, term kept per row
         scored = self._score_terms(present, idf, fid=fid, keep_term=True)
@@ -7836,12 +7755,12 @@ class InvertedIndex:
         cand = sorted(t for t, c in tf.items() if c >= min_term_freq)
         if not cand:
             return self._empty_scored(False)
-        dfs = self.term_stats(cand, field)
+        [(dfs, idf, _ubs)] = self._legs_stats([(self._fid(field), cand)])
         cand = [t for t in cand if dfs.get(t, 0) >= min_doc_freq]
         if not cand:
             return self._empty_scored(False)
         ranked = sorted(
-            cand, key=lambda t: (-tf[t] * _idf(self.n_docs, dfs[t]), t)
+            cand, key=lambda t: (-tf[t] * idf[t], t)
         )[: int(max_query_terms)]
         msm = (
             int(min_should_match)
@@ -8296,7 +8215,7 @@ class InvertedIndex:
         gate_sets: list[DataFrame] = []  # AND-mode per-clause match sets
         bare_terms = sorted(set(bare))
         if bare_terms:
-            dfs, idf, _ = self._leg_stats(bare_terms, fid)
+            [(dfs, idf, _ubs)] = self._legs_stats([(fid, bare_terms)])
             present = [t for t in bare_terms if t in dfs]
             if conj and len(present) < len(bare_terms):
                 return self._empty_scored(False)

@@ -5,9 +5,11 @@ Kill points: the commit writer raises once (monkeypatched, no process
 kill), after every data write of a build, an append or a compaction. The
 previous record must keep the index readable and the next run must repair
 it. Also pinned: an open runs no Spark job, the job counts of a build, an
-append and a compaction, term-sorted postings and term_dict files, an
-append keeps the first build's ``created_ts`` (rollover age), and an index
-of another ``format_version`` is refused with ``IndexFormatError``.
+append and a compaction, the construct-time job counts of canonical
+queries, term-sorted postings and term_dict files, term_dict's statistics
+equal to an aggregate of the postings, an append keeps the first build's
+``created_ts`` (rollover age), and an index of another ``format_version``
+is refused with ``IndexFormatError``.
 """
 
 from __future__ import annotations
@@ -40,6 +42,16 @@ QUERY = "the and data"
 BUILD_JOBS_MAX = 24
 APPEND_JOBS_MAX = 23
 COMPACT_JOBS_MAX = 24
+# Spark jobs that building each query's DataFrame runs (warm handle), on
+# an index of the first 40 conversations with positions: per-term
+# statistics come from term_dict without a job; the phrase's jobs collect
+# its rarest term's doc ids
+QUERY_CONSTRUCT_JOBS_MAX = {
+    "topk_one_term": 0,
+    "topk_or": 0,
+    "match_phrase": 2,
+    "query_string": 0,
+}
 
 
 class KillPoint(RuntimeError):
@@ -146,6 +158,55 @@ def test_build_and_compact_job_counts_are_pinned(spark, base_build, compacted, o
     out, jobs = compacted
     assert 0 < len(jobs) <= COMPACT_JOBS_MAX, len(jobs)
     assert_is_full_index(InvertedIndex(spark, out), oracle)
+
+
+def test_term_dict_statistics_equal_the_postings_aggregate(spark, base_dir, appended, compacted):
+    """term_dict's (field, term, df, max_tf, min_dl) after a build, an
+    append and a compaction is exactly the aggregate of that index's
+    postings that queries used to compute."""
+    for idx in (base_dir, appended[0], compacted[0]):
+        post = (
+            spark.read.parquet(os.path.join(idx, "postings"))
+            .groupBy("field", "term")
+            .agg(
+                F.sum("n").alias("df"),
+                F.max(F.array_max("block_max_tf")).alias("max_tf"),
+                F.min(F.array_min("block_min_dl")).alias("min_dl"),
+            )
+        )
+        td = spark.read.parquet(os.path.join(idx, "term_dict")).select(
+            "field", "term", "df", "max_tf", "min_dl"
+        )
+        assert td.count() == post.count() > 0, idx
+        assert td.exceptAll(post).count() == 0, idx
+        assert post.exceptAll(td).count() == 0, idx
+
+
+@pytest.fixture(scope="module")
+def positions_ix(spark, tx, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("commit") / "positions")
+    build_index(
+        spark, tx.filter(F.col("conv_id") < SPLIT), out,
+        BuildConfig(n_segments=2, n_buckets=4, store_positions=True),
+    )
+    return InvertedIndex(spark, out)
+
+
+def test_query_construct_job_counts_are_pinned(spark, positions_ix):
+    ix = positions_ix
+    queries = {
+        "topk_one_term": lambda: ix.topk("the", 10),
+        "topk_or": lambda: ix.topk("the and data", 10),
+        "match_phrase": lambda: ix.match_phrase("of the", 10),
+        "query_string": lambda: ix.query_string(
+            "(the AND and) OR (data AND NOT of)", 10
+        ),
+    }
+    for name, build in queries.items():
+        build()  # warm: the handle resolves its table readers once
+        df, jobs = jobs_of(spark, f"query-pin-{name}", build)
+        assert len(jobs) <= QUERY_CONSTRUCT_JOBS_MAX[name], (name, len(jobs))
+        assert df.count() == 10, name
 
 
 def test_postings_and_term_dict_files_are_term_sorted(base_dir, appended, compacted):
@@ -261,3 +322,10 @@ def test_old_format_is_refused(spark, tx, base_dir, tmp_path):
         compact_index(spark, old, str(tmp_path / "c"))
     with pytest.raises(ValueError, match="format_version"):
         build_index(spark, tx, old, CFG)
+    # version 1 term_dicts lack max_tf/min_dl: no reader opens them
+    meta["format_version"] = 1
+    with open(os.path.join(old, "meta.json"), "w") as f:
+        json.dump(meta, f)
+    with pytest.raises(IndexFormatError, match="format_version 1"):
+        InvertedIndex(spark, old)
+

@@ -218,12 +218,12 @@ def test_multi_match_pruned_equals_exhaustive(built_index, fielded_index):
     legs = []
     fid = 0
     terms = sorted(set(built_index._analyze(q, None)))
-    dfs, idf, ubs = built_index._leg_stats(terms, fid)
+    [(dfs, idf, ubs)] = built_index._legs_stats([(fid, terms)])
     legs.append((fid, [t for t in terms if t in dfs], dfs, idf, ubs))
     # force the θ bootstrap on this tiny corpus (the adaptive gate skips it
     # below prune_min_postings because exhaustive ≡ pruned there)
     built_index.prune_min_postings = 0
-    assert built_index._multi_leg_theta(legs, 10) > 0.0  # pruning is live
+    assert built_index._theta(legs, 10) > 0.0  # pruning is live
     assert _rows6(built_index.multi_match(q, ["text"], k=10, prune=True)) == _rows6(
         built_index.multi_match(q, ["text"], k=10, prune=False)
     )

@@ -77,18 +77,53 @@ def fielded_index(spark, tmp_path_factory):
     return InvertedIndex(spark, out)
 
 
-def test_legs_stats_matches_per_leg_stats(fielded_index):
+def test_legs_stats_matches_per_leg_stats(fielded_index, tmp_path):
+    """The one term-statistics reader (pyarrow over term_dict) returns, for
+    every leg, exactly the df and block-max bound a Spark aggregate of
+    the postings gives, and idf = the BM25 idf of that df. A missing
+    bucket directory holds no terms; a missing term_dict raises."""
+    import shutil
+
+    from dart_importer_spark.index.build import bucket_of
+    from dart_importer_spark.query.engine import InvertedIndex, _idf, _tfn
+
     ix = fielded_index
-    specs = []
-    for fid in range(len(ix.fields)):
-        terms = sorted({t for t in ("beta", "news", "alpha", "two", "zeta")})
-        specs.append((fid, terms))
+    terms = sorted({"beta", "news", "alpha", "two", "zeta", "absent"})
+    specs = [(fid, terms) for fid in range(len(ix.fields))]
+    agg = {
+        (r["field"], r["term"]): r
+        for r in ix.postings()
+        .filter(F.col("term").isin(terms))
+        .groupBy("field", "term")
+        .agg(
+            F.sum("n").alias("df"),
+            F.max(F.array_max("block_max_tf")).alias("mtf"),
+            F.min(F.array_min("block_min_dl")).alias("mdl"),
+        )
+        .collect()
+    }
     batched = ix._legs_stats(specs)
-    for (fid, terms), (dfs_b, idf_b, ubs_b) in zip(specs, batched):
-        dfs, idf, ubs = ix._leg_stats(terms, fid)
-        assert dfs_b == dfs
-        assert idf_b == pytest.approx(idf)
-        assert ubs_b == pytest.approx(ubs)
+    assert len(batched) == len(specs)
+    for (fid, _), (dfs, idf, ubs) in zip(specs, batched):
+        want = {t: r for (f, t), r in agg.items() if f == fid}
+        assert dfs == {t: int(r["df"]) for t, r in want.items()}
+        assert idf == {t: _idf(ix.n_docs, d) for t, d in dfs.items()}
+        avgdl = ix.avgdl_by_field[fid]
+        assert ubs == {
+            t: idf[t] * _tfn(float(r["mtf"]), float(r["mdl"]), avgdl)
+            for t, r in want.items()
+        }
+    assert any(dfs for dfs, _, _ in batched)
+    assert "absent" not in set().union(*(dfs for dfs, _, _ in batched))
+
+    copy = str(tmp_path / "idx")
+    shutil.copytree(ix.dir, copy)
+    b = bucket_of("beta", ix.n_buckets)
+    shutil.rmtree(f"{copy}/term_dict/bucket={b}")
+    assert InvertedIndex(ix.spark, copy).term_stats(["beta"], "body") == {}
+    shutil.rmtree(f"{copy}/term_dict")
+    with pytest.raises(FileNotFoundError, match="term_dict"):
+        InvertedIndex(ix.spark, copy).term_stats(["beta"], "body")
 
 
 def test_lloyd_kmeans_deterministic_and_partitions_data():
